@@ -26,8 +26,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * same left-to-right index-order fold from 0.0, and the component
   * formula is the memoized twin of the SQL chain (parity-spec'd in
   * `RpProjectSpec`). Null semantics match the composed array exactly —
-  * a NULL input vector or ANY null element yields an array of `dims`
-  * NULLs (each per-plane fold is poisoned), never a NULL array.
+  * a NULL input vector, an EMPTY one (the composed `sequence(0, -1)`
+  * pairs it with two indices and no values) or ANY null element yields
+  * an array of `dims` NULLs (each per-plane fold is poisoned), never a
+  * NULL array.
   */
 case class RpProject(child: Expression, dims: Int)
     extends UnaryExpression {
@@ -78,12 +80,13 @@ object RpProject {
     Bridge.column(RpProject(
       Bridge.expression(vec.cast("array<double>")), dims))
 
-  /** The fused loop (also the codegen target). A null input or any
-    * null element yields `dims` null components — the composed form's
-    * poisoned folds.
+  /** The fused loop (also the codegen target). A null or empty input
+    * or any null element yields `dims` null components — the composed
+    * form's poisoned folds.
     */
   def compute(vec: ArrayData, dims: Int): ArrayData = {
-    if (vec == null) return new GenericArrayData(new Array[AnyRef](dims))
+    if (vec == null || vec.numElements() == 0)
+      return new GenericArrayData(new Array[AnyRef](dims))
     val n = vec.numElements()
     var i = 0
     while (i < n) {

@@ -21,14 +21,28 @@ import java.util.UUID
   *   data/_pday=YYYY-MM-DD/ (parquet files)   day partitions (BigQuery's
   *                                     _PARTITIONTIME decorator analog,
   *                                     PartitionedTableId.java:209-227)
-  *   _graft/table.json                 key fields + schema (SchemaManager cache)
-  *   _graft/bloom2/YYYY-MM-DD.bloom    per-partition key bloom filter
-  *                                     (format-versioned: dir + magic)
+  *   _graft/schema.json                table schema (SchemaManager cache);
+  *                                     written last by [[create]], so its
+  *                                     presence marks a complete table
+  *   _graft/keys.json                  key fields
+  *   _graft/options.props              layout options ([[TableOptions]])
+  *   _graft/snapshots/CURRENT          committed version (0 = created,
+  *                                     nothing committed yet)
   *   _graft/snapshots/v&lt;N&gt;.list        per-version day→file manifests
   *                                     (time travel: [[readAsOf]]/[[history]])
   *   _graft/history/v&lt;N&gt;/_pday=…       partition generations replaced at
   *                                     version N (reclaimed by [[vacuum]])
+  *   _graft/bloom2/YYYY-MM-DD.bloom    per-partition key bloom filter
+  *                                     (GFB3 magic + commit-version stamp)
+  *   _graft/zonemaps/&lt;col&gt;/&lt;day&gt;.props per-day column min/max sidecars
+  *   _graft/landings/&lt;id&gt;              markers of landed, not yet
+  *                                     committed appends (vacuum skips them)
+  *   _graft/batches/[&lt;stream&gt;-]b&lt;id&gt;  exactly-once markers of committed
+  *                                     streaming batches
   * }}}
+  *
+  * A directory without `_graft/snapshots/CURRENT` is not a table:
+  * [[WarehouseTable.open]] rejects it.
   *
   * == 100 TB design: why the merge scans only a bounded partition set ==
   *
@@ -338,10 +352,9 @@ final class WarehouseTable private (
     * (soak-found fix): a listing sweeps a concurrent append's
     * landed-but-uncommitted files into the rewrite; when that append's
     * conflict walk aborts it and it retries, its rows exist twice. The
-    * manifest holds exactly the committed files. Pre-snapshot tables
-    * (no commit yet — bootstrap) fall back to the listing; a file a
-    * concurrent swap archives mid-read fails the job with the
-    * documented transient FAILED_READ (retryable).
+    * manifest holds exactly the committed files; a file a concurrent
+    * swap archives mid-read fails the job with the documented
+    * transient FAILED_READ (retryable).
     */
   /** Convert a stale-read failure — a concurrent swap moved files this
     * op had planned to read (plan-time PATH_NOT_FOUND or execution-time
@@ -374,16 +387,8 @@ final class WarehouseTable private (
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       snap.add(partitionCol, "string"))
-    val cur = currentVersion
-    if (cur == 0L) {
-      // CURRENT=0 (a created, snapshot-enabled table): committed state
-      // is EMPTY — a listing would read concurrent writers' uncommitted
-      // files. No CURRENT at all: legacy pre-snapshot dir, listing is
-      // the only source of truth (single-writer by assumption).
-      return if (fs.exists(new Path(s"$snapDir/CURRENT"))) empty
-      else conformToSchema(readDays(days), snap)
-    }
-    val manifest = readManifest(cur)
+    // CURRENT=0 reads no manifest: nothing is committed yet
+    val manifest = readManifest(currentVersion)
     val paths = days.flatMap(d => manifest.getOrElse(d, Seq.empty)
       .map(f => s"$dataPath/$partitionCol=$d/$f"))
     if (paths.isEmpty) empty
@@ -636,7 +641,7 @@ final class WarehouseTable private (
     * commit didn't is replayed, and a plain [[append]] would duplicate
     * its rows. A COMMITTED batch is detected first — by its durable
     * `_graft/batches/b<batchId>` marker, or (crash between commit and
-    * marker) by its `b<batchId>-` files in the CURRENT manifest — and
+    * marker) by its tag in the CURRENT manifest's batches header — and
     * the replay returns without touching the table: under file-exact
     * manifests, re-landing a committed batch's files would orphan every
     * older snapshot that references the originals (the multi-writer
@@ -666,18 +671,11 @@ final class WarehouseTable private (
     // with the commit and carried forward by every later commit, so it
     // covers both the crash-between-commit-and-marker window AND the
     // case where a merge/compact has since rewritten the batch's files
-    // (which erases the b<id>- names the legacy check below relies on).
+    // (erasing their b<id>- names). Tags are `<ns>:<id>:<commitMillis>`.
     val marker = new Path(s"$root/_graft/batches/" +
       (if (ns == "default") s"b$batchId" else s"$ns-b$batchId"))
     if (fs.exists(marker)) return
-    val curV = currentVersion
-    // tags carry a commit timestamp as a third segment (age pruning);
-    // match on the ns:id prefix so either form detects the replay
-    val committedDurably = curV > 0L && manifestBatches(curV)
-      .exists(t => t == tag || t.startsWith(s"$tag:"))
-    // legacy fallback (pre-batches-header tables): file-name prefixes
-    if (committedDurably || (curV > 0L && readManifest(curV).values.exists(
-        _.exists(_.startsWith(filePrefix))))) {
+    if (manifestBatches(currentVersion).exists(_.startsWith(s"$tag:"))) {
       writeMetaString(spark, marker.toString, "committed")
       return
     }
@@ -791,8 +789,7 @@ final class WarehouseTable private (
     // AFTER the last checkpoint commit — batchIds are monotonic, so a
     // batch 64 ids back can never replay again (the checkpoint that
     // produced it committed long ago). Sliding window, best-effort (a
-    // missed delete is retried at id+64); the manifest scan above
-    // additionally covers any window-aged batch whose files survive.
+    // missed delete is retried at id+64).
     if (batchId >= 64L) {
       val aged = if (ns == "default") s"b${batchId - 64L}"
         else s"$ns-b${batchId - 64L}"
@@ -951,8 +948,8 @@ final class WarehouseTable private (
       // those files rewrite, everything else carries forward untouched.
       // Falls back to the whole-day swap when the batch is bulk (SMJ
       // territory), on the exact-bloom tightening/heal flushes (their
-      // staged blooms must cover whole days), or on a pre-snapshot
-      // table (no manifest to carry forward from).
+      // staged blooms must cover whole days), or before the first
+      // commit (no manifest to carry forward from).
       // `!bulk` is explicit (not implied by the row gates, which tests
       // shrink independently): the bulk path has no per-row driver
       // state, and file-granular carry-forward needs the whole-day
@@ -1291,8 +1288,8 @@ final class WarehouseTable private (
           stagedSlice("").as(partitionCol): _*)
       // FILE-granular (merge doc): only files actually HOLDING a
       // tombstoned key rewrite; inserts are pure additions. Whole-day
-      // fallback on the exact-bloom tightening/heal flushes,
-      // pre-snapshot tables, and bulk batches (whose tombstone key set
+      // fallback on the exact-bloom tightening/heal flushes, tables
+      // with no commit yet, and bulk batches (whose tombstone key set
       // must not broadcast).
       val fileGranular = !bulk && readBase > 0L &&
         (readBase + 1) % WarehouseTable.bloomRebuildEvery != 0 &&
@@ -1593,18 +1590,16 @@ final class WarehouseTable private (
 
   // ---- bloom key index ----
 
-  /** Versioned location + magic header. Format 2 stores
-    * `xxhash64(keyString)` longs probed with `mightContainLong`; format 1
-    * (the original `_graft/bloom/` directory, raw `putString` blooms) is
-    * probe-INCOMPATIBLE — probing an old bloom with new hashes returns
-    * false negatives, which silently drops partitions from the merge scan
-    * set (lost updates). So the format lives in both the directory name
-    * and a 4-byte magic: anything without the current magic is treated as
+  /** Day blooms store `xxhash64(keyString)` longs probed with
+    * `mightContainLong`, behind the `GFB3` magic
+    * ([[WarehouseTable.BloomMagic]]). A bloom of any other content is
+    * probe-INCOMPATIBLE — probing it with these hashes could return
+    * false negatives, which silently drops partitions from the merge
+    * scan set (lost updates). So a file without the magic is treated as
     * MISSING (the day falls back into the scan set — only ever extra
     * work, never wrong results) and is rebuilt on the next refresh.
     */
   private def bloomDir = s"$root/_graft/bloom2"
-  private def legacyBloomDir = s"$root/_graft/bloom"
 
   // \u0001 separator so multi-field keys cannot alias ("ab","c") vs ("a","bc")
   private def keyString(cols: Seq[Column]): Column =
@@ -1661,8 +1656,8 @@ final class WarehouseTable private (
     * day with no batch hashes (pure bloom-candidate that only kept/lost
     * rows) → old bloom untouched (already a superset); pre-existing +
     * batch hashes → old ∪ batch. Any day whose existing bloom is
-    * unreadable, legacy-format, or size-incompatible falls back to the
-    * exact rebuild — the same self-healing contract as [[upsertBlooms]].
+    * unreadable, of an unknown format, or size-incompatible falls back
+    * to the exact rebuild — the same self-healing contract as [[upsertBlooms]].
     */
   /** Build per-day blooms on the driver from raw (day, key-hash) rows —
     * bit-identical sizing to [[bloomAgg]], so the results stay
@@ -1731,7 +1726,7 @@ final class WarehouseTable private (
       write: java.io.OutputStream => Unit): Unit = {
     val out = new BufferedOutputStream(fs.create(p, true))
     try {
-      out.write(WarehouseTable.BloomMagic3)
+      out.write(WarehouseTable.BloomMagic)
       out.write(java.nio.ByteBuffer.allocate(8).putLong(stamp).array())
       write(out)
     } finally out.close()
@@ -1872,8 +1867,6 @@ final class WarehouseTable private (
             fs.exists(new Path(s"$dataPath/$partitionCol=$d"))) match {
           case Some(bytes) =>
             writeBloomFile(bloomPath, stamp, _.write(bytes))
-            val legacy = new Path(s"$legacyBloomDir/$d.bloom")
-            if (fs.exists(legacy)) fs.delete(legacy, false)
           case None =>
             if (fs.exists(bloomPath)) fs.delete(bloomPath, false)
         }
@@ -1883,26 +1876,22 @@ final class WarehouseTable private (
   }
 
   /** A touched pre-existing day whose bloom cannot take the driver-side
-    * union — legacy-format file, missing, or a header without the
-    * current magic. Such a flush switches to the exact staged-bloom
-    * path, which heals the day immediately (the old in-claim
-    * refreshBlooms contract) while keeping distributed work out of the
-    * claim window. Header-only probe: 4 bytes, not the whole bloom.
+    * union — missing, or a header without the current magic. Such a
+    * flush switches to the exact staged-bloom path, which heals the day
+    * immediately (the old in-claim refreshBlooms contract) while
+    * keeping distributed work out of the claim window. Header-only
+    * probe: 4 bytes, not the whole bloom.
     */
   private def bloomNeedsHeal(d: String): Boolean = {
     if (!fs.exists(new Path(s"$dataPath/$partitionCol=$d"))) return false
-    if (fs.exists(new Path(s"$legacyBloomDir/$d.bloom"))) return true
     val p = new Path(s"$bloomDir/$d.bloom")
     if (!fs.exists(p)) return true // pre-existing day, no bloom yet
     try {
       val in = fs.open(p)
       try {
-        val m = new Array[Byte](WarehouseTable.BloomMagic3.length)
+        val m = new Array[Byte](WarehouseTable.BloomMagic.length)
         val n = in.read(m)
-        // only the stamped format-3 header is healthy; a format-2 file
-        // still reads (stamp 0) but heals to format-3 on the next
-        // exact pass so the staleness column becomes exact for it
-        n != m.length || !java.util.Arrays.equals(m, WarehouseTable.BloomMagic3)
+        n != m.length || !java.util.Arrays.equals(m, WarehouseTable.BloomMagic)
       } finally in.close()
     } catch {
       // vanished between exists and open (a concurrent swap dropped
@@ -1930,9 +1919,7 @@ final class WarehouseTable private (
         false // day emptied by the merge: no bloom, nothing to rebuild
       } else {
         val hashes = liveDayHashes.getOrElse(d, Array.empty[Long])
-        val hadLegacy = fs.exists(new Path(s"$legacyBloomDir/$d.bloom"))
         if (!preExisting.contains(d)) { writeBloom(bloomPath, batchBloom(hashes)); false }
-        else if (hadLegacy) true // legacy-era partition: rebuild + retire
         else WarehouseTable.readVersionedBloom(fs, bloomPath) match {
           case None => true // missing/unreadable existing bloom: rebuild
           case Some(_) if hashes.isEmpty => false // old bloom already covers
@@ -1942,19 +1929,14 @@ final class WarehouseTable private (
         }
       }
     }
-    // failed-union days (unreadable/legacy/size-incompatible existing
+    // failed-union days (unreadable/size-incompatible existing
     // bloom — rare self-heal): DROP the stale bloom instead of a
     // live-dir rebuild scan. Missing blooms read as always-candidate
     // (conservative), and the next periodic exact pass — computed from
     // staging, outside any claim — restores them. This keeps the claim
     // window free of distributed work AND avoids the stale-overwrite
     // race a post-finalize live-dir rebuild would have.
-    rebuild.foreach { d =>
-      val p = new Path(s"$bloomDir/$d.bloom")
-      if (fs.exists(p)) fs.delete(p, false)
-      val legacy = new Path(s"$legacyBloomDir/$d.bloom")
-      if (fs.exists(legacy)) fs.delete(legacy, false)
-    }
+    dropBlooms(rebuild)
   }
 
   private def refreshBlooms(days: Seq[String], stamp: Long): Unit = {
@@ -1982,9 +1964,6 @@ final class WarehouseTable private (
       rows.foreach { r =>
         writeBloomFile(new Path(s"$bloomDir/${r.getString(0)}.bloom"), stamp,
           _.write(r.getAs[Array[Byte]](1)))
-        // retire the format-1 bloom, if this table predates the format bump
-        val legacy = new Path(s"$legacyBloomDir/${r.getString(0)}.bloom")
-        if (fs.exists(legacy)) fs.delete(legacy, false)
       }
     }
     if (wrote.isEmpty) dropBlooms(existing) // lease timeout: conservative
@@ -1997,7 +1976,7 @@ final class WarehouseTable private (
     * ADDS rows — old-bloom ∪ batch-bloom covers exactly the partition's
     * keys; deletes (which would leave stale bits) never take this path.
     * Any day where the union can't be formed exactly — existing bloom
-    * unreadable/legacy/size-incompatible while the partition already had
+    * unreadable/size-incompatible while the partition already had
     * data — falls back to a full [[refreshBlooms]] rebuild, so the
     * invariant "day bloom is a superset of the day's keys" (what keeps
     * [[bloomCandidateDays]] from dropping a partition with a live key,
@@ -2018,7 +1997,6 @@ final class WarehouseTable private (
       val batch =
         try Option(BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
         catch { case scala.util.control.NonFatal(_) => None }
-      val hadLegacy = fs.exists(new Path(s"$legacyBloomDir/$d.bloom"))
       // a merge keeps min(existing stamp, requested stamp): merging an
       // append's keys into a bloom a DELETE left behind does not repair
       // that tightness loss, so the written stamp must not claim
@@ -2037,7 +2015,6 @@ final class WarehouseTable private (
             catch { case scala.util.control.NonFatal(_) => None }
           }
         }
-        else if (hadLegacy) None // legacy-era partition: rebuild + retire
         else WarehouseTable.readStampedBloom(fs, p).flatMap { case (os, old) =>
           try { old.mergeInPlace(b); Some((old, math.min(os, stamp))) }
           catch { case scala.util.control.NonFatal(_) => None }
@@ -2169,11 +2146,7 @@ final class WarehouseTable private (
       spark.sparkContext.hadoopConfiguration)
     require(!destFs.exists(new Path(s"$destRoot/_graft/schema.json")),
       s"clone destination is already a table: $destRoot")
-    writeMetaString(spark, s"$destRoot/_graft/schema.json", schema.json)
-    writeMetaString(spark, s"$destRoot/_graft/keys.json",
-      keyFields.mkString("[\"", "\",\"", "\"]"))
-    writeMetaString(spark, s"$destRoot/_graft/options.props",
-      optionsToProps(options))
+    writeTableMeta(spark, destRoot, keyFields, schema, options)
     val days = listDays()
     val dayFiles: Map[String, Seq[String]] = days.map { d =>
       val srcDir = new Path(s"$dataPath/$partitionCol=$d")
@@ -2265,7 +2238,6 @@ final class WarehouseTable private (
     require(smallBytes > 0, s"smallBytes must be positive: $smallBytes")
     require(minSmallFiles >= 2, s"minSmallFiles must be >= 2: $minSmallFiles")
     val readBase = currentVersion
-    if (readBase == 0L) return Seq.empty // pre-snapshot: use compactPartitions
     val snap = schema
     val manifest = readManifest(readBase)
     val smallByDay: Map[String, Seq[String]] = manifest.flatMap { case (d, names) =>
@@ -2394,8 +2366,7 @@ final class WarehouseTable private (
     val v = claimCommit(op, days, readBase + 1)
     // carry-forward = the base generation minus the replaced files,
     // read AFTER winning the claim from the exact manifest finalize
-    // rebases on (manifestBase(v) also covers the legacy pre-snapshot
-    // listing fallback): a pre-claim readManifest(readBase) would race
+    // rebases on: a pre-claim readManifest(readBase) would race
     // a concurrent vacuum of that version — an empty map would silently
     // drop every carried file from the new manifest. Our days' entries
     // are read-time-stable regardless (overlapping commits abort the
@@ -2493,10 +2464,7 @@ final class WarehouseTable private (
         fs.mkdirs(archDir)
         fs.rename(new Path(s"$dataPath/$partitionCol=$d"),
           new Path(archDir, s"$partitionCol=$d"))
-        Seq(bloomDir, legacyBloomDir).foreach { dir =>
-          val bloom = new Path(s"$dir/$d.bloom")
-          if (fs.exists(bloom)) fs.delete(bloom, false)
-        }
+        dropBlooms(Seq(d))
       }
       finalizeCommit("expire", dropped, v, Map.empty) // all dropped
       dropped
@@ -2521,10 +2489,7 @@ final class WarehouseTable private (
       fs.mkdirs(archDir)
       fs.rename(new Path(s"$dataPath/$partitionCol=$d"),
         new Path(archDir, s"$partitionCol=$d"))
-      Seq(bloomDir, legacyBloomDir).foreach { dir =>
-        val bloom = new Path(s"$dir/$d.bloom")
-        if (fs.exists(bloom)) fs.delete(bloom, false)
-      }
+      dropBlooms(Seq(d))
     }
     finalizeCommit("truncate", dropped, v, Map.empty)
     dropped
@@ -2855,11 +2820,8 @@ final class WarehouseTable private (
   private def historyDir = s"$root/_graft/history"
 
   /** Current snapshot version; 0 before the first committed mutation. */
-  def currentVersion: Long = {
-    val p = new Path(s"$snapDir/CURRENT")
-    if (!fs.exists(p)) 0L
-    else readMetaString(spark, p.toString).trim.toLong
-  }
+  def currentVersion: Long =
+    readMetaString(spark, s"$snapDir/CURRENT").trim.toLong
 
   private def listDayFiles(dir: Path): Seq[String] =
     if (!fs.exists(dir)) Seq.empty
@@ -2916,27 +2878,19 @@ final class WarehouseTable private (
   }
 
   /** The manifest to rebase a commit of version `v` on: the newest
-    * FINALIZED version below `v` (pending claims hold no file lists), or
-    * a full day listing for a pre-snapshot table.
+    * FINALIZED version below `v` (pending claims hold no file lists);
+    * empty when there is none.
     */
-  private def manifestBase(v: Long): Map[String, Seq[String]] = {
-    val w = finalizedBelow(v)
-    if (w > 0) readManifest(w)
-    else if (!fs.exists(new Path(s"$snapDir/CURRENT")))
-      listDays().map(d =>
-        d -> listDayFiles(new Path(s"$dataPath/$partitionCol=$d"))).toMap
-    else Map.empty
-  }
+  private def manifestBase(v: Long): Map[String, Seq[String]] =
+    readManifest(finalizedBelow(v))
 
   /** Committed-batch tags to carry into a commit rebased at `v`: the
     * batches line of the newest finalized version below it.
     */
-  private def batchesBase(v: Long): Seq[String] = {
-    val w = finalizedBelow(v)
-    if (w > 0) manifestBatches(w) else Seq.empty
-  }
+  private def batchesBase(v: Long): Seq[String] =
+    manifestBatches(finalizedBelow(v))
 
-  /** Committed exactly-once batch tags (`<streamId>:<batchId>`)
+  /** Committed exactly-once batch tags (`<streamId>:<batchId>:<commitMillis>`)
     * recorded in snapshot `version`'s manifest header. Durable against
     * merge/compact rewrites — unlike the `b<id>-` file-name prefixes,
     * which a rewrite erases — because every commit carries the line
@@ -2965,8 +2919,7 @@ final class WarehouseTable private (
     *    foreachBatch replays within minutes of its crash, not days),
     *    and without the age prune every ephemeral fresh-checkpoint
     *    restart would leave up to 64 tags in every future manifest
-    *    FOREVER — O(restarts) metadata growth. Tags without a
-    *    timestamp (transitional format) are kept.
+    *    FOREVER — O(restarts) metadata growth.
     */
   private def pruneBatchTags(batches: Seq[String], tag: String): Seq[String] = {
     val now = System.currentTimeMillis()
@@ -3170,8 +3123,6 @@ final class WarehouseTable private (
       else fs.listStatus(archDir).toSeq.map(_.getPath.getName)
         .filter(_.startsWith(s"$partitionCol="))
         .map(_.stripPrefix(s"$partitionCol="))
-    // file-level rollback needs the generation the claim rebased on
-    lazy val baseManifest = manifestBase(v)
     processed.foreach { d =>
       val live = new Path(s"$dataPath/$partitionCol=$d")
       val arch = new Path(archDir, s"$partitionCol=$d")
@@ -3183,17 +3134,17 @@ final class WarehouseTable private (
         // uncommitted files, which abort on the rolled-back overlap
         // exactly like the whole-day path) and moving the archived
         // files back. "Known" comes from the swap's own pre-rename
-        // live-file journal ([[WarehouseTable.LiveSwapJournal]]) —
-        // exact on EVERY table shape, including a legacy pre-snapshot
-        // table where manifestBase degenerates to a post-tear listing;
-        // the manifest base remains only as the fallback for archives
-        // written before the journal existed.
+        // live-file journal ([[WarehouseTable.LiveSwapJournal]]), which
+        // is written before the marker — a marker without it is damage
+        // no rollback can undo exactly, so recovery stops loudly.
         val journal = new Path(arch, WarehouseTable.LiveSwapJournal)
+        if (!fs.exists(journal))
+          throw new IllegalStateException(
+            s"cannot roll back crashed claim v$v: $arch has a " +
+              s"${WarehouseTable.PartialSwapMarker} marker but no $journal")
         val known: Set[String] =
-          if (fs.exists(journal))
-            readMetaString(spark, journal.toString).linesIterator
-              .filter(_.nonEmpty).toSet
-          else baseManifest.getOrElse(d, Seq.empty).toSet
+          readMetaString(spark, journal.toString).linesIterator
+            .filter(_.nonEmpty).toSet
         if (fs.exists(live))
           fs.listStatus(live).toSeq.filter { st =>
             val n = st.getPath.getName
@@ -3222,10 +3173,7 @@ final class WarehouseTable private (
     // generation): missing blooms read as always-candidate —
     // conservative — and recovery stays free of distributed scans that
     // could race a concurrent writer's immediate re-swap of these days
-    processed.foreach { d =>
-      val p = new Path(s"$bloomDir/$d.bloom")
-      if (fs.exists(p)) fs.delete(p, false)
-    }
+    dropBlooms(processed)
     fs.delete(new Path(s"$snapDir/v$v.list"), false)
     ()
   }
@@ -3482,7 +3430,7 @@ final class WarehouseTable private (
     *  - `manifest_files`: files the CURRENT manifest references for the
     *    day; `unmanifested_files` > 0 flags landed-but-uncommitted
     *    leftovers (vacuum reconciles them once aged)
-    *  - `bloom`: `ok` / `stale-format` (legacy or wrong magic — read as
+    *  - `bloom`: `ok` / `stale-format` (no GFB3 magic — read as
     *    always-candidate until the next exact pass heals it) / `missing`
     *  - `bloom_stale_versions`: committed versions that touched the day
     *    ABOVE the bloom's commit-version stamp (format-3 header) — an
@@ -3536,9 +3484,8 @@ final class WarehouseTable private (
         if (cur == 0L) 0L
         else files.count(f => !known.contains(f.getPath.getName)).toLong
       val bloomPath = new Path(s"$bloomDir/$d.bloom")
-      val legacyPath = new Path(s"$legacyBloomDir/$d.bloom")
       val bloomState =
-        if (!fs.exists(bloomPath) && !fs.exists(legacyPath)) "missing"
+        if (!fs.exists(bloomPath)) "missing"
         else if (bloomNeedsHeal(d)) "stale-format"
         else "ok"
       // EXACT staleness from the bloom's commit-version stamp (format-3
@@ -3703,28 +3650,16 @@ final class WarehouseTable private (
     * [[readAsOf]]/[[readCommitted]] semantics re-expressed as a file
     * listing the stock file-source planner can consume: committed
     * manifest files only (a concurrent writer's landed-but-uncommitted
-    * files are invisible), per-file archive resolution for historical
-    * versions, and the legacy pre-snapshot listing fallback. One
-    * `listStatus` per (generation dir, day) location group — O(days),
-    * never O(files), in driver round trips.
+    * files are invisible) and per-file archive resolution for
+    * historical versions. One `listStatus` per (generation dir, day)
+    * location group — O(days), never O(files), in driver round trips.
     */
   private[sources] def connectorFileGroups(
       version: Option[Long]): Seq[(String, Seq[org.apache.hadoop.fs.FileStatus])] = {
     val cur = currentVersion
     version.foreach(v => require(v >= 1 && v <= cur,
       s"version $v not in available range 1..$cur"))
-    if (cur == 0L) {
-      // CURRENT=0: a created snapshot-enabled table's committed state
-      // is EMPTY; no CURRENT at all: legacy pre-snapshot dir, listing
-      // is the source of truth (single-writer by assumption)
-      if (fs.exists(new Path(s"$snapDir/CURRENT"))) return Seq.empty
-      return listDays().sorted.map { d =>
-        val dir = new Path(s"$dataPath/$partitionCol=$d")
-        d -> fs.listStatus(dir).toSeq.filter(st => st.isFile &&
-          !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-      }
-    }
+    if (cur == 0L) return Seq.empty // CURRENT=0: nothing committed yet
     val v = version.getOrElse(cur)
     if (v != cur) {
       if (!fs.exists(new Path(s"$snapDir/v$v.list")))
@@ -4312,40 +4247,38 @@ final class WarehouseTable private (
     // only days under no young marker are swept. Crashed writers
     // leave their marker behind, so their files (and the marker) age
     // out together on the long landing retention.
-    if (fs.exists(new Path(s"$snapDir/CURRENT"))) {
-      val landCutoff =
-        System.currentTimeMillis() - WarehouseTable.landingRetentionMs
-      val landings = new Path(landingsDir)
-      val protectedDays: Set[String] =
-        if (!fs.exists(landings)) Set.empty
-        else fs.listStatus(landings).toSeq.filter(_.isFile).flatMap { st =>
-          if (st.getModificationTime < landCutoff) {
-            // aged marker: its writer is long dead; drop it so the
-            // files it covered become sweepable below
-            try { fs.delete(st.getPath, false); () }
-            catch { case _: java.io.IOException => () }
-            Seq.empty
-          } else
-            // a marker that vanishes mid-read was just released by its
-            // writer — the files are committed (in the known-set) or
-            // already deleted, so skipping the protection is safe
-            try readMetaString(spark, st.getPath.toString)
-              .linesIterator.filter(_.nonEmpty).toSeq
-            catch { case _: java.io.IOException => Seq.empty }
-        }.toSet
-      val manifest = readManifest(cur)
-      listDays().filterNot(protectedDays.contains).foreach { d =>
-        val dir = new Path(s"$dataPath/$partitionCol=$d")
-        val known = manifest.getOrElse(d, Seq.empty).toSet
-        if (fs.exists(dir))
-          fs.listStatus(dir).toSeq
-            .filter { st =>
-              val n = st.getPath.getName
-              st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-                !known.contains(n) && st.getModificationTime < cutoff
-            }
-            .foreach(st => fs.delete(st.getPath, false))
-      }
+    val landCutoff =
+      System.currentTimeMillis() - WarehouseTable.landingRetentionMs
+    val landings = new Path(landingsDir)
+    val protectedDays: Set[String] =
+      if (!fs.exists(landings)) Set.empty
+      else fs.listStatus(landings).toSeq.filter(_.isFile).flatMap { st =>
+        if (st.getModificationTime < landCutoff) {
+          // aged marker: its writer is long dead; drop it so the
+          // files it covered become sweepable below
+          try { fs.delete(st.getPath, false); () }
+          catch { case _: java.io.IOException => () }
+          Seq.empty
+        } else
+          // a marker that vanishes mid-read was just released by its
+          // writer — the files are committed (in the known-set) or
+          // already deleted, so skipping the protection is safe
+          try readMetaString(spark, st.getPath.toString)
+            .linesIterator.filter(_.nonEmpty).toSeq
+          catch { case _: java.io.IOException => Seq.empty }
+      }.toSet
+    val manifest = readManifest(cur)
+    listDays().filterNot(protectedDays.contains).foreach { d =>
+      val dir = new Path(s"$dataPath/$partitionCol=$d")
+      val known = manifest.getOrElse(d, Seq.empty).toSet
+      if (fs.exists(dir))
+        fs.listStatus(dir).toSeq
+          .filter { st =>
+            val n = st.getPath.getName
+            st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
+              !known.contains(n) && st.getModificationTime < cutoff
+          }
+          .foreach(st => fs.delete(st.getPath, false))
     }
     // exactly-once batch markers of dead checkpoint lineages: the
     // append path ages out its OWN stream's markers (sliding 64-id
@@ -4465,8 +4398,8 @@ object WarehouseTable {
 
   /** Flush-phase wall-clock attribution (r18): `GRAFT_WH_PROF=1` makes
     * [[WarehouseTable.prof]] print one stderr line per instrumented
-    * phase of append/merge — the between-jobs driver time ProfileS6's
-    * job listener cannot attribute. Unset (production/bench), the
+    * phase of append/merge — the between-jobs driver time a Spark job
+    * listener cannot attribute. Unset (production/bench), the
     * check is one static boolean and the phases run untouched.
     */
   private[sources] val profEnabled: Boolean =
@@ -4481,27 +4414,17 @@ object WarehouseTable {
       r
     }
 
-  /** 4-byte magic prefixing every format-2 bloom file ("GFB2"). */
-  private[sources] val BloomMagic: Array[Byte] = "GFB2".getBytes("UTF-8")
-
-  /** Format-3 bloom magic ("GFB3"): the magic is followed by an 8-byte
+  /** Bloom file magic ("GFB3"): the magic is followed by an 8-byte
     * big-endian COMMIT-VERSION STAMP — the version whose committed
     * key-set the bloom covers — then the serialized filter. The stamp
     * is what makes [[WarehouseTable.describeHealth]]'s staleness
     * column exact (count committed versions touching the day above the
     * stamp) instead of the old mtime-vs-commit-timestamp heuristic,
     * which clock skew or archival mtime preservation misclassifies in
-    * both directions. Format-2 files still read (stamp 0 — maximally
-    * stale, so health drives their heal).
+    * both directions.
     */
-  private[sources] val BloomMagic3: Array[Byte] = "GFB3".getBytes("UTF-8")
+  private[sources] val BloomMagic: Array[Byte] = "GFB3".getBytes("UTF-8")
 
-  /** Marker file inside a version-archive day dir recording that the
-    * archive holds only the REPLACED files of a file-granular swap
-    * ([[WarehouseTable.swapFilesGranular]]), not a whole generation;
-    * its body lists the replaced names. Underscore-prefixed, so every
-    * data-file listing ignores it.
-    */
   /** Test-only crash injection for the kill-and-resume probe
     * ([[graft.streaming.KillResumeProbe]]): a JVM launched with
     * `-Dgraft.probe.haltPreCommit=N` hard-halts on its N-th passage
@@ -4523,19 +4446,22 @@ object WarehouseTable {
       Runtime.getRuntime.halt(137)
     }
 
+  /** Marker file inside a version-archive day dir recording that the
+    * archive holds only the REPLACED files of a file-granular swap
+    * ([[WarehouseTable.swapFilesGranular]]), not a whole generation;
+    * its body lists the replaced names. Underscore-prefixed, so every
+    * data-file listing ignores it.
+    */
   private[sources] val PartialSwapMarker: String = "_partial"
 
   /** Pre-swap live-file journal a [[swapFilesGranular]] day archive
     * carries NEXT TO its [[PartialSwapMarker]]: the exact file names
-    * live in the day the instant before the swap's first rename.
-    * Crash recovery rolls back from THIS list, never from
-    * `manifestBase` — on a legacy pre-snapshot table (no CURRENT)
-    * manifestBase falls back to a live-dir listing taken AFTER the
-    * torn renames, which would count the torn new-generation files as
-    * known and resurrect the archived originals alongside their
-    * rewrites (row duplication; round-12 advisor finding). Written
-    * BEFORE the marker, so a marker's presence guarantees the journal
-    * is complete.
+    * live in the day the instant before the swap's first rename. Crash
+    * recovery rolls back from THIS list — a listing taken after the
+    * torn renames would count the torn new-generation files as known
+    * and resurrect the archived originals alongside their rewrites.
+    * Written BEFORE the marker, so a marker's presence guarantees the
+    * journal is complete; recovery rejects a marker without one.
     */
   private[sources] val LiveSwapJournal: String = "_prelive"
 
@@ -4546,10 +4472,10 @@ object WarehouseTable {
   private[sources] val BloomMaxBytes: Long = 64L << 20
 
   /** Read a versioned bloom; None when the file is missing, truncated,
-    * oversized, carries an unknown magic (a pre-versioning or future
-    * format), claims a bit-array longer than the file itself, or fails
-    * to deserialize for ANY non-fatal reason — callers treat None as
-    * "no index, scan the partition", which is always safe. A corrupt
+    * oversized, carries any magic but GFB3, claims a bit-array longer
+    * than the file itself, or fails to deserialize for ANY non-fatal
+    * reason — callers treat None as "no index, scan the partition",
+    * which is always safe. A corrupt
     * body must never fail the merge job (`BloomFilter.readFrom` can
     * throw `NegativeArraySizeException` etc. from a damaged length
     * word, not just `IOException`), and the length word is validated
@@ -4558,10 +4484,7 @@ object WarehouseTable {
   private[graft] def readVersionedBloom(fs: FileSystem, p: Path): Option[BloomFilter] =
     readStampedBloom(fs, p).map(_._2)
 
-  /** Read a bloom with its commit-version stamp: (stamp, filter).
-    * Format-3 carries the stamp after the magic; format-2 reads as
-    * stamp 0 (unknown — maximally stale).
-    */
+  /** Read a bloom with its commit-version stamp: (stamp, filter). */
   private[graft] def readStampedBloom(fs: FileSystem,
       p: Path): Option[(Long, BloomFilter)] = {
     // spark BloomFilterImpl body layout: version int, numHashFunctions
@@ -4569,20 +4492,15 @@ object WarehouseTable {
     val headerLen = 12
     try {
       val len = fs.getFileStatus(p).getLen
-      if (len > BloomMaxBytes) return None
+      if (len > BloomMaxBytes || len < BloomMagic.length + 8 + headerLen)
+        return None
       val in = new java.io.DataInputStream(new BufferedInputStream(fs.open(p)))
       try {
         val magic = new Array[Byte](BloomMagic.length)
-        if (len < magic.length + headerLen) return None
         in.readFully(magic)
-        val (stamp, bodyLen) =
-          if (java.util.Arrays.equals(magic, BloomMagic3)) {
-            if (len < magic.length + 8 + headerLen) return None
-            (in.readLong(), (len - magic.length - 8).toInt)
-          } else if (java.util.Arrays.equals(magic, BloomMagic))
-            (0L, (len - magic.length).toInt)
-          else return None
-        val body = new Array[Byte](bodyLen)
+        if (!java.util.Arrays.equals(magic, BloomMagic)) return None
+        val stamp = in.readLong()
+        val body = new Array[Byte]((len - magic.length - 8).toInt)
         in.readFully(body)
         val numWords = java.nio.ByteBuffer.wrap(body).getInt(8)
         if (numWords < 0 || headerLen + 8L * numWords > body.length) None
@@ -4601,8 +4519,7 @@ object WarehouseTable {
       try {
         val magic = new Array[Byte](BloomMagic.length)
         in.readFully(magic)
-        if (java.util.Arrays.equals(magic, BloomMagic3)) Some(in.readLong())
-        else if (java.util.Arrays.equals(magic, BloomMagic)) Some(0L)
+        if (java.util.Arrays.equals(magic, BloomMagic)) Some(in.readLong())
         else None
       } finally in.close()
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -4791,23 +4708,45 @@ object WarehouseTable {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(metaPath))) {
       options.validate(schema)
-      writeMetaString(spark, metaPath, schema.json)
-      writeMetaString(spark, s"$root/_graft/keys.json",
-        keyFields.mkString("[\"", "\",\"", "\"]"))
-      writeMetaString(spark, s"$root/_graft/options.props", optionsToProps(options))
-      // seed CURRENT=0 so a created table is snapshot-enabled from
-      // birth: without it, manifestBase falls back to a FULL DIRECTORY
-      // LISTING during the first commits — which, under concurrent
-      // writers, sweeps another writer's landed-but-uncommitted files
-      // into the first manifest (dangling when that writer aborts;
-      // soak-found). The listing fallback remains only for legacy
-      // pre-snapshot directories adopted via open().
-      writeMetaString(spark, s"$root/_graft/snapshots/CURRENT", "0")
+      writeTableMeta(spark, root, keyFields, schema, options)
       new WarehouseTable(spark, root, keyFields, options)
-    } else new WarehouseTable(spark, root, keyFields, readOptions(spark, root))
+    } else {
+      requireSnapshotVersioned(spark, root)
+      new WarehouseTable(spark, root, keyFields, readOptions(spark, root))
+    }
+  }
+
+  /** Write a new table's metadata. `schema.json` goes LAST: it is the
+    * existence marker [[create]], `GraftCatalog` and `GraftDataSource`
+    * look for, so a concurrent creator or opener that sees it also
+    * sees the keys, the options and `CURRENT=0` (the snapshot-versioned
+    * empty state every commit rebases on). `CURRENT` is create-if-absent:
+    * a creator racing another must not reset a version that the
+    * winner's first commits have already advanced.
+    */
+  private def writeTableMeta(spark: SparkSession, root: String,
+      keyFields: Seq[String], schema: StructType, options: TableOptions): Unit = {
+    tryWriteNewMetaString(spark, s"$root/_graft/snapshots/CURRENT", "0")
+    writeMetaString(spark, s"$root/_graft/keys.json",
+      keyFields.mkString("[\"", "\",\"", "\"]"))
+    writeMetaString(spark, s"$root/_graft/options.props", optionsToProps(options))
+    writeMetaString(spark, s"$root/_graft/schema.json", schema.json)
+  }
+
+  /** Reject a directory without `_graft/snapshots/CURRENT`: its
+    * committed state has no source of truth (a directory listing would
+    * count other writers' uncommitted files), and no writer of this
+    * format produces one.
+    */
+  private def requireSnapshotVersioned(spark: SparkSession, root: String): Unit = {
+    val current = new Path(s"$root/_graft/snapshots/CURRENT")
+    if (!current.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(current))
+      throw new IllegalStateException(
+        s"$root is not a snapshot-versioned graft table: $current is missing")
   }
 
   def open(spark: SparkSession, root: String): WarehouseTable = {
+    requireSnapshotVersioned(spark, root)
     val keys = readMetaString(spark, s"$root/_graft/keys.json")
       .stripPrefix("[").stripSuffix("]")
       .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
@@ -4824,10 +4763,7 @@ object WarehouseTable {
     .mkString("\n")
 
   private def readOptions(spark: SparkSession, root: String): TableOptions = {
-    val p = new Path(s"$root/_graft/options.props")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return TableOptions() // pre-options table
-    val kv = readMetaString(spark, p.toString).linesIterator
+    val kv = readMetaString(spark, s"$root/_graft/options.props").linesIterator
       .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
     TableOptions(
       clusteringFields = kv.getOrElse("clusteringFields", "")

@@ -21,8 +21,7 @@ import java.nio.file.Files
   *  - partition pruning, parquet filter/projection pushdown and
   *    zone-map day skipping all engage through the stock file-source
   *    planner (FileSourceScanExec metrics + explain audit — the 100 TB
-  *    scan-bounding proofs, now via the connector);
-  *  - the legacy pre-snapshot listing fallback.
+  *    scan-bounding proofs, now via the connector).
   */
 class GraftDataSourceSpec extends AnyFunSuite {
 
@@ -191,17 +190,6 @@ class GraftDataSourceSpec extends AnyFunSuite {
       id >= 150L && id <= 199L))
     assert(totals.numFiles == 1L,
       s"zone maps did not skip days through the connector: ${totals.numFiles}")
-  }
-
-  test("legacy pre-snapshot table reads through the directory-listing fallback") {
-    val root = tmpRoot()
-    val seed = WarehouseTable.create(spark, root, Seq("k1"), destSchema)
-    seed.append(batch(Seq(1L -> "a", 2L -> "b"), day = 1))
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/_graft/snapshots"), true)
-    val df = spark.read.format("graft").load(root)
-    assert(asPairs(df) == Set((1L, "a", "2024-01-01"), (2L, "b", "2024-01-01")))
   }
 
   test("write path: df.write.format(\"graft\") creates, appends, evolves, " +

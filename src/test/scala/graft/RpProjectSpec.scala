@@ -99,4 +99,35 @@ class RpProjectSpec extends AnyFunSuite {
     assert(rows(1).getSeq[java.lang.Double](1).forall(_ == null))
     assert(rows(2).getSeq[java.lang.Double](1).forall(_ != null))
   }
+
+  test("empty vector yields dims nulls like the composed form, codegen and interpreted") {
+    val df = Seq((1L, Array.empty[Double]), (2L, Array(1.0, 2.0))).toDF("id", "v")
+    val dims = 3
+    // the projection must run in the physical plan, not be folded into
+    // the local relation by the optimizer (which evaluates interpreted)
+    val modes = Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+    modes.foreach { case (factoryMode, wholeStage) =>
+      val conf = Map(
+        "spark.sql.codegen.factoryMode" -> factoryMode,
+        "spark.sql.codegen.wholeStage" -> wholeStage,
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val rows = df.select($"id",
+            RpProject($"v", dims).as("got"), composed($"v", dims).as("want"))
+          .collect().sortBy(_.getLong(0))
+        val empty = rows(0)
+        assert(!empty.isNullAt(1) && !empty.isNullAt(2))
+        assert(empty.getSeq[java.lang.Double](2).size == dims &&
+          empty.getSeq[java.lang.Double](2).forall(_ == null),
+          s"composed form on an empty vector: ${empty.get(2)}")
+        assert(empty.getSeq[java.lang.Double](1) ==
+          empty.getSeq[java.lang.Double](2), s"$factoryMode: ${empty.get(1)}")
+        val live = rows(1)
+        assert(live.getSeq[Double](1).map(java.lang.Double.doubleToLongBits) ==
+          live.getSeq[Double](2).map(java.lang.Double.doubleToLongBits))
+      } finally conf.keys.foreach(spark.conf.unset)
+    }
+  }
 }

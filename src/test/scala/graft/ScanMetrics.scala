@@ -58,6 +58,9 @@ object ScanMetrics {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
+    // async listener bus: events of queries that finished BEFORE the
+    // block would otherwise reach the listener late and be counted
+    org.apache.spark.graftbridge.ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       val out = body

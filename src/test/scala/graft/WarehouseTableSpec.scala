@@ -1299,7 +1299,7 @@ class WarehouseTableSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     // simulate a stale/foreign-format index: overwrite day1's bloom with
-    // bytes that deserialize fine as *something* but carry no GFB2 magic
+    // bytes that deserialize fine as *something* but carry no GFB3 magic
     // (the failure mode ADVICE flagged: an old putString-format bloom
     // probed with xxhash64 longs silently answers "not here")
     val day1Bloom = new org.apache.hadoop.fs.Path(s"$root/_graft/bloom2/2024-01-01.bloom")
@@ -1320,27 +1320,6 @@ class WarehouseTableSpec extends AnyFunSuite {
     // the refresh rewrote day1's bloom in the current format
     assert(WarehouseTable.readVersionedBloom(fs, day1Bloom).nonEmpty,
       "refresh must rewrite a current-format bloom")
-  }
-
-  test("legacy bloom directory is ignored for probing and retired on refresh") {
-    val root = tmpRoot()
-    val t = mkTable(root)
-    t.append(Seq((1L, "old")).toDF("k1", "f1").withColumn("partitionTime", ts(1)))
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // rewind day1 to a pre-versioning table: bloom only at the old path
-    val newP = new org.apache.hadoop.fs.Path(s"$root/_graft/bloom2/2024-01-01.bloom")
-    val oldP = new org.apache.hadoop.fs.Path(s"$root/_graft/bloom/2024-01-01.bloom")
-    fs.mkdirs(oldP.getParent)
-    fs.rename(newP, oldP)
-    // no current-format bloom → day1 must be scanned (not skipped), and
-    // the update must find its row
-    val days = t.merge(staged(Seq((1L, Some("new"), 1L, 5))))
-    assert(days.contains("2024-01-01"))
-    assert(t.read().select($"k1", $"f1").as[(Long, String)].collect().toSet ==
-      Set((1L, "new")))
-    // refresh wrote the versioned bloom and retired the legacy file
-    assert(fs.exists(newP) && !fs.exists(oldP))
   }
 
   test("partition routing is UTC-pinned regardless of session timezone") {
@@ -1411,14 +1390,16 @@ class WarehouseTableSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val day1Bloom = new org.apache.hadoop.fs.Path(s"$root/_graft/bloom2/2024-01-01.bloom")
-    // valid GFB2 magic, then a body whose length word claims a 2^30-word
-    // (8 GiB) bit array the 16 trailing bytes cannot back — unguarded,
-    // BloomFilter.readFrom would try the allocation or throw something
-    // other than IOException and fail the whole merge job
+    // valid GFB3 header (magic + 8-byte stamp), then a body whose length
+    // word claims a 2^30-word (8 GiB) bit array the 16 trailing bytes
+    // cannot back — unguarded, BloomFilter.readFrom would try the
+    // allocation or throw something other than IOException and fail
+    // the whole merge job
     val out = fs.create(day1Bloom, true)
     try {
       val dos = new java.io.DataOutputStream(out)
-      dos.write("GFB2".getBytes("UTF-8"))
+      dos.write("GFB3".getBytes("UTF-8"))
+      dos.writeLong(t.currentVersion) // commit-version stamp
       dos.writeInt(1)       // bloom format version
       dos.writeInt(3)       // numHashFunctions
       dos.writeInt(1 << 30) // corrupt word count

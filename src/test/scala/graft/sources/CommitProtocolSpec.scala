@@ -407,56 +407,22 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(t.read().count() == 2)
   }
 
-  // ---- 6. round-12 advisor: legacy-table file-granular crash recovery ----
+  // ---- 6. one on-disk format: snapshot-versioned tables only ----
 
-  test("LEGACY pre-snapshot table: a file-granular DML crash between swap and " +
-      "finalize rolls back exactly — no resurrected originals next to rewrites") {
+  test("open rejects a table directory with no snapshots/CURRENT and names the path") {
     val root = tmpRoot()
-    val seed = mkTable(root)
-    (1 to 4).foreach(i => seed.append(batch(Seq(i.toLong -> s"v$i"))))
-    // adopt-as-legacy: wipe the snapshot machinery entirely (a
-    // pre-snapshot directory opened in place — currentVersion == 0,
-    // no CURRENT, manifestBase degenerates to a live-dir listing)
+    mkTable(root).append(batch(Seq(1L -> "a", 2L -> "b")))
+    // data, schema, keys and options are all present; only the
+    // snapshot pointer is missing — a directory written before
+    // snapshot versioning
     fs(root).delete(path(s"$root/_graft/snapshots"), true)
-    val t = WarehouseTable.open(spark, root)
-    assert(t.currentVersion == 0L)
-    val day = "2024-01-01"
-    val liveBefore = fs(root)
-      .listStatus(path(s"$root/data/_pday=$day")).map(_.getPath.getName).toSet
-    val fname = t.read().where($"k1" === 2L)
-      .select(input_file_name()).head().getString(0).split('/').last
-    // stage the rewrite of the one matched file, claim v1, swap — CRASH
-    // before finalizeCommit. The pre-r13 rollback computed "known"
-    // from manifestBase(v), which with no CURRENT lists the live dir
-    // AFTER the torn renames: the torn rewrite read as known, nothing
-    // was deleted, and the archived original came back NEXT TO it —
-    // duplicated rows. The _prelive journal makes the rollback exact.
-    val staging = s"$root/.merge-legacycrash"
-    Seq((2L, "upd")).toDF("k1", "f1").withColumn("_pday", lit(day))
-      .write.partitionBy("_pday").parquet(staging)
-    val v = t.claimCommit("update-where", Seq(day), 1L)
-    t.swapFilesGranular(staging, Map(day -> Seq(fname)), v)
-    // age the claim; the next claim triggers recovery and aborts on the
-    // overlapping rolled-back day
-    val claimPath = java.nio.file.Paths.get(s"$root/_graft/snapshots/v$v.list")
-    val aged = new String(java.nio.file.Files.readAllBytes(claimPath), "UTF-8")
-      .replaceFirst("\\t\\d+\\t",
-        "\t" + (System.currentTimeMillis() - 20L * 60 * 1000) + "\t")
-    java.nio.file.Files.write(claimPath, aged.getBytes("UTF-8"))
-    intercept[java.util.ConcurrentModificationException] {
-      t.claimCommit("compact", Seq(day), v)
-    }
-    val liveAfter = fs(root)
-      .listStatus(path(s"$root/data/_pday=$day")).map(_.getPath.getName).toSet
-    assert(liveAfter == liveBefore,
-      s"legacy rollback not exact: $liveAfter vs $liveBefore")
-    val rows = t.read().select($"k1", $"f1").as[(Long, String)].collect()
-    assert(rows.length == 4, s"duplicated rows after legacy rollback: ${rows.toSeq}")
-    assert(rows.toMap == Map(1L -> "v1", 2L -> "v2", 3L -> "v3", 4L -> "v4"))
-    // replay converges
-    t.updateWhere($"k1" === 2L, Map("f1" -> lit("upd")))
-    assert(t.read().select($"k1", $"f1").as[(Long, String)].collect().toMap
-      == Map(1L -> "v1", 2L -> "upd", 3L -> "v3", 4L -> "v4"))
+    assert(fs(root).exists(path(s"$root/_graft/schema.json")))
+    assert(fs(root).listStatus(path(s"$root/data/_pday=2024-01-01")).nonEmpty)
+    val e = intercept[IllegalStateException](WarehouseTable.open(spark, root))
+    assert(e.getMessage.contains(root) &&
+      e.getMessage.contains("_graft/snapshots/CURRENT"), e.getMessage)
+    // create's existing-table branch applies the same check
+    intercept[IllegalStateException](mkTable(root))
   }
 
   // ---- 6b. round-13: restore / cloneToFast crash windows ----
