@@ -30,8 +30,11 @@ import java.util.UUID
   *                                     nothing committed yet)
   *   _graft/snapshots/v&lt;N&gt;.list        per-version day→file manifests
   *                                     (time travel: [[readAsOf]]/[[history]])
-  *   _graft/history/v&lt;N&gt;/_pday=…       partition generations replaced at
-  *                                     version N (reclaimed by [[vacuum]])
+  *   _graft/history/v&lt;N&gt;/_pday=…       partition generations (or single
+  *                                     files) replaced at version N
+  *                                     (reclaimed by [[vacuum]])
+  *   _graft/history/v&lt;N&gt;/_prelive      pre-swap live files of a
+  *                                     file-granular swap (crash journal)
   *   _graft/bloom2/YYYY-MM-DD.bloom    per-partition key bloom filter
   *                                     (GFB3 magic + commit-version stamp)
   *   _graft/zonemaps/&lt;col&gt;/&lt;day&gt;.props per-day column min/max sidecars
@@ -64,10 +67,15 @@ import java.util.UUID
   *     set. Cost: O(batch) broadcast + O(days) bloom reads spread across
   *     the cluster — driver memory independent of table history.
   *
-  * The rewrite itself is write-new-then-swap per partition (the atomic
-  * analog of BigQuery's transactional MERGE; single-writer assumption,
-  * same as the reference's one-task merge scheduler,
-  * `MergeBatches.java:213-277`).
+  * Every rewrite writes its new files to a private staging dir, then
+  * swaps them in file by file (whole days for bulk rewrites) under a
+  * multi-writer commit protocol — the analog of BigQuery's transactional
+  * MERGE: the writer atomically claims the next snapshot version
+  * ([[claimCommit]]), aborts retryably when a concurrent commit touched
+  * its days, and publishes the version's manifest after the swap
+  * ([[finalizeCommit]]); a crashed claim is rolled back by the next
+  * writer that meets it. The reference instead serializes merges through
+  * a one-task scheduler (`MergeBatches.java:213-277`).
   */
 final class WarehouseTable private (
     val spark: SparkSession,
@@ -347,15 +355,6 @@ final class WarehouseTable private (
       readWithTableSchema(existing)
   }
 
-  /** Committed-files read of `days` at CURRENT — the dest input every
-    * SWAP op (merge/compact) must use instead of a directory listing
-    * (soak-found fix): a listing sweeps a concurrent append's
-    * landed-but-uncommitted files into the rewrite; when that append's
-    * conflict walk aborts it and it retries, its rows exist twice. The
-    * manifest holds exactly the committed files; a file a concurrent
-    * swap archives mid-read fails the job with the documented
-    * transient FAILED_READ (retryable).
-    */
   /** Convert a stale-read failure — a concurrent swap moved files this
     * op had planned to read (plan-time PATH_NOT_FOUND or execution-time
     * FAILED_READ/FileNotFound) — into the protocol's typed retryable
@@ -382,6 +381,15 @@ final class WarehouseTable private (
             s"to read — re-run against the current table state: ${e.getMessage}")
     }
 
+  /** Committed-files read of `days` at CURRENT — the dest input every
+    * SWAP op (merge/compact) must use instead of a directory listing
+    * (soak-found fix): a listing sweeps a concurrent append's
+    * landed-but-uncommitted files into the rewrite; when that append's
+    * conflict walk aborts it and it retries, its rows exist twice. The
+    * manifest holds exactly the committed files; a file a concurrent
+    * swap archives mid-read fails the job with the documented
+    * transient FAILED_READ (retryable).
+    */
   private[sources] def readCommitted(days: Seq[String],
       snap: StructType = schema): DataFrame = {
     def empty = spark.createDataFrame(
@@ -874,64 +882,141 @@ final class WarehouseTable private (
     *    day-truncated exactly like `CAST(CAST(DATE(src.partitionTime) AS
     *    DATE) AS TIMESTAMP)` (`MergeQueries.java:429-452`).
     *
-    * Returns the set of partition days rewritten.
+    * A batch of at most `broadcastMaxRows` rows rewrites only the dest
+    * files holding one of its keys; a larger one rewrites its candidate
+    * days whole through the sort-merge [[mergeJoin]] ([[mergeFlush]]).
+    * No flush rewrites whole days for layout's sake: file layout is
+    * left to compaction ([[compactSmall]], [[compactPartitions]]).
+    *
+    * Returns the set of partition days the flush scanned.
     */
   def merge(staged: DataFrame, delete: Boolean = true,
       broadcastMaxRows: Long = WarehouseTable.broadcastMergeMaxRows): Seq[String] = {
     val src = MergeOps.latestPerKey(staged)
-    src.cache()
-    // this flush's eager checkpoints (handles, not names: concurrent
-    // flushes into the same table must each free exactly their own)
-    var flushCkpts: List[DataFrame] = Nil
+    // when delete is off, a (precondition-violating) tombstone updates
+    // matched rows to null values and inserts null-value rows — exactly
+    // the full-outer plan's behavior
+    val live = if (delete) col("value").isNotNull else lit(true)
+    mergeFlush("merge", src, mustMatch = lit(true), mayInsert = live,
+      broadcastMaxRows)(
+      matchedRows = (survivors, matched, snap) => {
+        // updates keep the dest row's day; inserts are the live batch
+        // keys no dest row matched
+        val liveRows = src.where(live).as("s")
+        val updates = matched.as("m")
+          .join(broadcast(liveRows), keyMatch("m"), "inner")
+          .select(keyFields.map(f => col(s"m.`$f`").as(f)) ++
+            batchValues(src, snap, "s.") :+
+            col(s"m.$partitionCol").as(partitionCol): _*)
+        val matchedKeys = matched.select(keyFields.map(f => col(s"`$f`")): _*)
+        val inserts = liveRows
+          .join(broadcast(matchedKeys.as("m")), keyMatch("m"), "left_anti")
+        survivors.unionByName(updates).unionByName(batchRows(inserts, snap))
+      },
+      dayRows = (dest, _, snap) => mergeJoin(dest, src, delete, snap))
+  }
+
+  /** J3 delete-only MERGE against the table (`MergeQueries.java:310-412`):
+    * tombstone-fence the batch, delete dest rows whose key has a
+    * surviving tombstone, then plain-insert every surviving
+    * non-tombstone row into its `date(partitionTime)` partition
+    * (duplicates allowed, as in the reference's delete-only mode). Same
+    * flush as [[merge]]: only tombstones need to find existing rows.
+    */
+  def mergeDeleteOnly(staged: DataFrame): Seq[String] = {
+    val fenced = MergeOps.tombstoneFence(staged)
+    val tomb = col("value").isNull
+    mergeFlush("merge-delete", fenced, mustMatch = tomb, mayInsert = !tomb,
+      WarehouseTable.broadcastMergeMaxRows)(
+      matchedRows = (survivors, _, snap) =>
+        survivors.unionByName(batchRows(fenced.where(!tomb), snap)),
+      dayRows = (dest, bulk, snap) => {
+        // a bulk tombstone set no longer fits an executor: shuffled
+        // anti-join instead of a broadcast one
+        val tombKeys = fenced.where(tomb).select(col("key")).as("s")
+        dest.as("d")
+          .join(if (bulk) tombKeys else broadcast(tombKeys), keyMatch("d"), "left_anti")
+          .unionByName(batchRows(fenced.where(!tomb), snap))
+      })
+  }
+
+  /** The one flush behind [[merge]] and [[mergeDeleteOnly]]; each mode
+    * supplies only what differs:
+    *
+    *  - `batch`: the prepared batch (`key`, `value`, `partitionTime`
+    *    structs and columns), cached for the flush;
+    *  - `mustMatch`: the batch rows that must find their key's existing
+    *    row — they drive the bloom probe and the matched-file join;
+    *  - `mayInsert`: the batch rows that may add their key to their
+    *    slice day — their hashes join that day's bloom;
+    *  - `matchedRows(survivors, matched, snap)`: the new rows replacing
+    *    the matched files, given those files' rows no batch key hits
+    *    and the matched dest keys (key columns + `_pday`);
+    *  - `dayRows(dest, bulk, snap)`: the new rows of whole candidate days.
+    *
+    * One rule picks the plan: a batch that fits the driver (at most
+    * [[WarehouseTable.appendHashCollectMaxRows]] rows) and has at most
+    * `fileGranularMaxRows` rows rewrites only the dest files holding a
+    * matched key and carries every other file forward
+    * ([[matchFiles]]); anything larger rewrites its candidate days.
+    *
+    * Blooms: the file-granular flush unions the batch's insert hashes
+    * into the touched day blooms driver-side ([[unionBloomsAfterSwap]]).
+    * Every whole-day flush, every [[WarehouseTable.bloomRebuildEvery]]-th
+    * version and any flush scanning a day whose bloom needs healing
+    * ([[bloomNeedsHeal]]) instead write EXACT blooms of every scanned
+    * day's new file set — carried plus staged files ([[exactBlooms]]) —
+    * computed before the claim and written inside it.
+    */
+  private def mergeFlush(op: String, batch: DataFrame, mustMatch: Column,
+      mayInsert: Column, fileGranularMaxRows: Long)(
+      matchedRows: (DataFrame, DataFrame, StructType) => DataFrame,
+      dayRows: (DataFrame, Boolean, StructType) => DataFrame): Seq[String] = {
+    batch.cache()
     try {
       // conflict window opens before the dest read (claimCommit doc)
       val readBase = currentVersion
-      val probe = src.select(stagedSlice("").as("d"),
+      val probe = batch.select(stagedSlice("").as("d"),
         xxhash64(keyString(keyFields.map(f => col(s"key.$f")))).as("h"),
-        col("value").isNotNull.as("live"))
+        mustMatch.as("match"), mayInsert.as("ins"))
       // ONE capped collect (and one cache materialization) serves the
-      // source row count, the touched-day set, the bloom probe's key
-      // hashes, AND the post-swap bloom union (unionBloomsAfterSwap).
-      // src is one-row-per-key, so the raw (day, hash, live) projection
-      // is already ~distinct — same driver bound as a grouped collect,
-      // but with no aggregation exchange the collect is a single
-      // post-dedup-shuffle stage (one fewer job per flush). The LIMIT
-      // is the driver-heap gate (same row bound as the append fold): a
-      // backfill-scale batch over the gate takes the BULK path below,
-      // where nothing per-row ever crosses the driver.
+      // emptiness check, the row count, the touched-day set, the bloom
+      // probe's key hashes AND the post-swap bloom union. The raw
+      // projection needs no aggregation exchange, so the collect is a
+      // single stage (one job fewer per flush). The LIMIT is the
+      // driver-heap gate (the append fold's row bound): a
+      // backfill-scale batch over it takes the BULK path below, where
+      // nothing per-row ever crosses the driver.
       val hashGate = math.min(
         WarehouseTable.appendHashCollectMaxRows, (Int.MaxValue - 1).toLong)
       val dayHash = WarehouseTable.prof("merge.probeCollect") {
         probe.limit(hashGate.toInt + 1).collect() }
       if (dayHash.isEmpty) return Seq.empty // nothing staged → nothing to rewrite
       val bulk = dayHash.length > hashGate
-      val (srcRows, batchDays, candDays, liveDayHashes) =
+      val (batchDays, candDays, insertHashes) =
         if (!bulk) WarehouseTable.prof("merge.candidateDays") {
-          val keyHashes = dayHash.map(_.getLong(1)).distinct
-          // live (non-tombstone) hashes per slice day: exactly the keys
-          // the merge could INSERT into that day — tombstones never
-          // insert, and updated keys are already covered by their dest
+          val matchHashes = dayHash.filter(_.getBoolean(2)).map(_.getLong(1)).distinct
+          // insert hashes per slice day: exactly the keys the flush can
+          // ADD to that day — matched keys are already in their dest
           // day's bloom
-          val liveByDay = dayHash
-            .filter(r => r.getBoolean(2) && r.getString(0) != null)
+          val insByDay = dayHash
+            .filter(r => r.getBoolean(3) && r.getString(0) != null)
             .groupBy(_.getString(0)).map { case (d, rs) => d -> rs.map(_.getLong(1)) }
           val bd = dayHash.map(_.getString(0)).filter(_ != null).distinct.toSeq
-          (dayHash.length.toLong, bd, bloomCandidateDays(keyHashes, bd), liveByDay)
+          (bd, bloomCandidateDays(matchHashes, bd), insByDay)
         } else {
-          // BULK path (ad-hoc backfill): day set + row count via a
-          // distributed agg (O(days) rows back), candidate days via the
-          // exact keys semi-join, and the touched days' sidecars
-          // rebuilt EXACT from the staging output below instead of a
-          // per-row driver union
+          // BULK path (ad-hoc backfill): the day set via a distributed
+          // distinct (O(days) rows back), candidate days via the exact
+          // keys semi-join, blooms exact from the staging output
           WarehouseTable.bulkMergePaths.incrementAndGet()
-          val dayCounts = WarehouseTable.prof("merge.bulk.dayCounts") {
-            probe.groupBy(col("d")).agg(count(lit(1)).as("n")).collect() }
-          val rows = dayCounts.map(_.getLong(1)).sum
-          val bd = dayCounts.map(_.getString(0)).filter(_ != null).toSeq
-          val srcKeys = src.select(keyFields.map(f => col(s"key.$f").as(f)): _*)
+          val bd = WarehouseTable.prof("merge.bulk.days") {
+            probe.select(col("d")).where(col("d").isNotNull)
+              .distinct().collect().map(_.getString(0)).toSeq }
+          val matchKeys = batch.where(mustMatch)
+            .select(keyFields.map(f => col(s"key.$f").as(f)): _*)
           val cand = WarehouseTable.prof("merge.bulk.candidateDays") {
-            exactCandidateDays(srcKeys, bd) }
-          (rows, bd, cand, Map.empty[String, Array[Long]])
+            exactCandidateDays(matchKeys, bd) }
+          (bd, cand, Map.empty[String, Array[Long]])
         }
       val days = (batchDays ++ candDays).distinct.sorted
 
@@ -943,254 +1028,151 @@ final class WarehouseTable private (
       // CANNOT_RESOLVE_COLUMN). The evolved field reaches these rows on
       // the NEXT flush; reads conform it to NULL meanwhile.
       val snap = schema
-      // FILE-granular flush (the steady-state micro-batch path): the
-      // keys-only dest scan yields the exact matched-file set, only
-      // those files rewrite, everything else carries forward untouched.
-      // Falls back to the whole-day swap when the batch is bulk (SMJ
-      // territory), on the exact-bloom tightening/heal flushes (their
-      // staged blooms must cover whole days), or before the first
-      // commit (no manifest to carry forward from).
-      // `!bulk` is explicit (not implied by the row gates, which tests
-      // shrink independently): the bulk path has no per-row driver
-      // state, and file-granular carry-forward needs the whole-day
-      // exact-bloom rebuild it cannot provide
-      val fileGranular = !bulk && srcRows <= broadcastMaxRows && readBase > 0L &&
-        (readBase + 1) % WarehouseTable.bloomRebuildEvery != 0 &&
-        !days.exists(bloomNeedsHeal)
-      if (fileGranular) {
-        val (merged, matchedFiles) = WarehouseTable.prof("merge.fgPlan") {
-          mergeFileGranularPlan(days, src, delete, snap) }
-        val staging = s"$root/.merge-${UUID.randomUUID().toString.take(8)}"
-        val preExisting = days.filter(d =>
-          fs.exists(new Path(s"$dataPath/$partitionCol=$d"))).toSet
-        WarehouseTable.prof("merge.stagingWrite") {
-          guardStaleRead(clusteredWrite(merged).write
-            .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging)) }
-        val stagedFiles = stagedDayFiles(staging)
-        val affected = (matchedFiles.keySet ++ stagedFiles.keySet).toSeq.sorted
-        val v = WarehouseTable.prof("merge.claim") {
-          claimCommit("merge", days, readBase + 1) }
-        // carry-forward base AFTER winning the claim, from the exact
-        // manifest finalize will rebase on: reading readBase's manifest
-        // earlier would race a concurrent vacuum (retention shorter
-        // than the stage window reads an empty map and silently drops
-        // the carried files); manifestBase(v) cannot be vacuumed while
-        // this claim is held, and our days' entries in it equal the
-        // read-time ones (any overlapping commit aborted the claim walk)
-        val base = manifestBase(v)
-        val newDayFiles = affected.map { d =>
-          val gone = matchedFiles.getOrElse(d, Seq.empty).toSet
-          d -> (base.getOrElse(d, Seq.empty).filterNot(gone.contains) ++
-            stagedFiles.getOrElse(d, Seq.empty))
-        }.toMap
-        WarehouseTable.prof("merge.swap") {
-          swapFilesGranular(staging,
-            affected.map(d => d -> matchedFiles.getOrElse(d, Seq.empty)).toMap, v) }
-        WarehouseTable.prof("merge.blooms") {
-          unionBloomsAfterSwap(days, liveDayHashes, preExisting, v) }
-        WarehouseTable.prof("merge.finalize") {
-          finalizeCommit("merge", affected, v, newDayFiles)
-          expireOldPartitions()
-          autoVacuum()
-        }
-        return days
-      }
-      val dest = readCommitted(days, snap)
-      val merged =
-        if (srcRows <= broadcastMaxRows) {
-          val (m, ck) = mergeJoinBroadcast(dest, src, delete, snap)
-          flushCkpts = ck :: flushCkpts
-          m
-        } else mergeJoin(dest, src, delete, snap)
-
+      // `!bulk` is explicit (not implied by the row ceiling, which tests
+      // shrink independently): the bulk path keeps no per-row driver state
+      val fileGranular = !bulk && dayHash.length <= fileGranularMaxRows
+      val (merged, matchedFiles) =
+        if (fileGranular) WarehouseTable.prof("merge.fgPlan") {
+          val (survivors, matched, files) =
+            matchFiles(days, batch.where(mustMatch).select(col("key")), snap)
+          (matchedRows(survivors, matched, snap), files)
+        } else (dayRows(readCommitted(days, snap), bulk, snap), Map.empty[String, Seq[String]])
       val staging = s"$root/.merge-${UUID.randomUUID().toString.take(8)}"
       val preExisting = days.filter(d =>
         fs.exists(new Path(s"$dataPath/$partitionCol=$d"))).toSet
-      WarehouseTable.prof("merge.wholeDay.stagingWrite") {
+      WarehouseTable.prof("merge.stagingWrite") {
         guardStaleRead(clusteredWrite(merged).write
           .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging)) }
       val stagedFiles = stagedDayFiles(staging)
-      // exact blooms from the PRIVATE staging dir, computed BEFORE the
-      // claim (stagedExactBlooms doc), on the periodic tightening
-      // cadence — decided on the EXPECTED version readBase+1; if
-      // contention re-sequences the claim the tightening slips a
-      // version, a maintenance schedule, not a correctness property —
-      // or immediately when any touched day's bloom needs healing; the
-      // BULK path always goes exact — the staging output IS the touched
-      // days' complete new generation, and it is the distributed
-      // replacement for the per-row driver bloom union
-      val exactBlooms =
-        if (bulk || (readBase + 1) % WarehouseTable.bloomRebuildEvery == 0 ||
-            days.exists(bloomNeedsHeal))
-          Some(WarehouseTable.prof("merge.wholeDay.exactBlooms") {
-            stagedExactBlooms(staging) })
-        else None
-      val v = claimCommit("merge", days, readBase + 1)
-      WarehouseTable.prof("merge.wholeDay.swap") {
-        swapPartitions(staging, days, v) }
-      exactBlooms match {
-        case Some(bs) => writeExactBlooms(days, bs, v)
-        case None => unionBloomsAfterSwap(days, liveDayHashes, preExisting, v)
+      val affected = (matchedFiles.keySet ++ stagedFiles.keySet).toSeq.sorted
+
+      // exact blooms on the tightening cadence decided on the EXPECTED
+      // version readBase+1 — a re-sequenced claim slips the tightening a
+      // version, a maintenance schedule, not a correctness property
+      val exact = !fileGranular ||
+        (readBase + 1) % WarehouseTable.bloomRebuildEvery == 0 ||
+        days.exists(bloomNeedsHeal)
+      // an exact flush rewrites every scanned day's bloom, so it commits
+      // all of them (a concurrent append to one aborts and re-unions its
+      // keys — the writeExactBlooms argument); a union flush commits
+      // only the days whose files change
+      val touched = if (exact) days else affected
+      // the files of day `d` in manifest `m` this flush carries forward
+      def carried(m: Map[String, Seq[String]], d: String): Seq[String] =
+        if (!fileGranular) Seq.empty
+        else m.getOrElse(d, Seq.empty).filterNot(matchedFiles.getOrElse(d, Seq.empty).toSet)
+      val atBase =
+        if (!exact || !fileGranular) Map.empty[String, Seq[String]]
+        else try readManifest(readBase)
+        catch { case _: java.io.IOException => Map.empty[String, Seq[String]] }
+      val blooms = if (!exact) None else Some(WarehouseTable.prof("merge.exactBlooms") {
+        exactBlooms(Seq(dataPath -> touched.map(d => d -> carried(atBase, d)).toMap,
+          staging -> stagedFiles)) })
+      val v = WarehouseTable.prof("merge.claim") {
+        claimCommit(op, days, readBase + 1) }
+      // carry-forward base AFTER winning the claim, from the exact
+      // manifest finalize will rebase on: readBase's manifest may be
+      // vacuumed under a long stage window, while manifestBase(v) cannot
+      // be while this claim is held, and our days' entries in it equal
+      // the read-time ones (any overlapping commit aborted the claim walk)
+      val base = manifestBase(v)
+      WarehouseTable.prof("merge.swap") {
+        if (fileGranular) swapFilesGranular(staging,
+          affected.map(d => d -> matchedFiles.getOrElse(d, Seq.empty)).toMap, v)
+        else swapPartitions(staging, days, v) }
+      WarehouseTable.prof("merge.blooms") {
+        blooms match {
+          // the carried files differ from the claim-time base only when
+          // a concurrent vacuum removed readBase's manifest before it was
+          // read — then the blooms may miss carried keys: drop them
+          // (missing reads as always-candidate; the next exact flush heals)
+          case Some(bs) if touched.forall(d =>
+              carried(base, d).toSet == carried(atBase, d).toSet) =>
+            writeExactBlooms(touched, bs, v)
+          case Some(_) => dropBlooms(touched)
+          case None => unionBloomsAfterSwap(days, insertHashes, preExisting, v)
+        } }
+      WarehouseTable.prof("merge.finalize") {
+        finalizeCommit(op, touched, v, touched.map(d =>
+          d -> (carried(base, d) ++ stagedFiles.getOrElse(d, Seq.empty))).toMap)
+        expireOldPartitions()
+        autoVacuum()
       }
-      finalizeCommit("merge", days, v, stagedFiles)
-      expireOldPartitions()
-      autoVacuum()
       days
-    } finally {
-      src.unpersist()
-      // the staging write was the checkpoints' last consumer — free
-      // their MEMORY_AND_DISK blocks now instead of at ContextCleaner
-      // GC (deterministic per-flush memory, and a long-lived session's
-      // block manager no longer grows with flush count)
-      flushCkpts.foreach(graft.util.GraftCache.releaseCheckpointOf)
-    }
+    } finally batch.unpersist()
   }
 
-  /** The file-granular broadcast merge plan: (merged rows to stage,
-    * day → matched file names to replace).
-    *
-    * == Why this is strictly cheaper than the whole-day plan ==
-    *
-    * The whole-day broadcast plan reads the candidate days TWICE: a
-    * column-pruned keys scan (the updates leg) and a full-row scan (the
-    * survivors leg). Here the keys scan additionally carries
-    * `input_file_name`, so the inner join against the batch keys yields
-    * the EXACT matched-file set as a by-product — and the full-row
-    * survivors scan then touches ONLY those files. A 10-key flush into
-    * a day of hundreds of well-clustered files reads and rewrites a
-    * handful; every unmatched file carries forward without a byte of
-    * I/O. Same legs otherwise: survivors (anti), updates (inner ⋈
-    * batch values), inserts (anti vs matched keys), every join
-    * broadcasting the bounded batch side, the dest never shuffled.
-    *
-    * The matched-file join uses ALL batch keys — including tombstones
-    * (the `touched` set) — because a file whose only hits are
-    * tombstones still must rewrite (to drop those rows); `updates`
-    * then joins the live subset only.
+  /** The file-granular dest side of [[mergeFlush]]: the keys-only scan
+    * of `days` also carries `input_file_name`, so its inner join against
+    * `matchKeys` (a `key` struct column) yields the EXACT matched
+    * (day, file) set, and only those files are read in full. Returns
+    * (the matched files' rows no such key hits, the matched dest keys
+    * with their `_pday`, day → matched file names). Every unmatched file
+    * carries forward without a byte of I/O: a 10-key flush into a day of
+    * hundreds of clustered files reads and rewrites a handful. Every
+    * join broadcasts the batch-bounded side; the dest is never shuffled.
     */
-  private def mergeFileGranularPlan(days: Seq[String], src: DataFrame,
-      delete: Boolean, snap: StructType)
-      : (DataFrame, Map[String, Seq[String]]) = {
-    val srcVal = mergeValueFields(src, snap).map { case (f, inBatch) =>
-      if (inBatch) col(s"s.value.`${f.name}`").as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }
-    val srcKeys = src.select(col("key"))
-    val live = if (delete) src.where(col("value").isNotNull) else src
-    val keyCond = keyFields.map(f => col(s"d.$f") === col(s"s.key.$f")).reduce(_ && _)
+  private def matchFiles(days: Seq[String], matchKeys: DataFrame,
+      snap: StructType): (DataFrame, DataFrame, Map[String, Seq[String]]) = {
     // keys + slice + file name only: Catalyst prunes the scan to the
-    // key columns' pages (same cost as the old updates leg)
+    // key columns' pages
     val destKeys = readCommitted(days, snap).select(
       keyFields.map(f => col(s"`$f`")) :+ col(partitionCol) :+
         element_at(split(input_file_name(), "/"), -1).as("_gfile"): _*)
-    // matched dest rows (≤ batch keys, file-granular implies srcRows ≤
-    // broadcastMergeMaxRows): ONE bounded collect serves all three
-    // consumers — the matched-file set (driver-side groupBy below), the
-    // updates leg's stream side, and the insert anti-key set, the
-    // latter two rebuilt as a LocalRelation with the plan's own schema.
-    // r17 materialized this as a named eager checkpoint (2 jobs) plus a
-    // SECOND (day, file) collect of the same cardinality (1 job) and a
-    // handle-release in merge()'s finally; the single collect is one
-    // job, crosses the driver once at the same row bound, and leaves no
-    // persisted blocks to free (r18, guide §1.2 driver fixed costs)
-    val touchedPlan = destKeys.as("d")
-      .join(broadcast(srcKeys.as("s")), keyCond, "inner")
+    // matched dest rows (≤ batch keys): ONE bounded collect serves the
+    // matched-file set (driver-side dedup — a distinct() would cost an
+    // exchange and an extra AQE job per flush) and, rebuilt as a
+    // LocalRelation with the plan's own schema, the callers' matched-key
+    // legs — one job, no persisted blocks to free
+    val matchedPlan = destKeys.as("d")
+      .join(broadcast(matchKeys.as("s")), keyMatch("d"), "inner")
       .select(keyFields.map(f => col(s"d.`$f`").as(f)) :+
         col(s"d.$partitionCol").as(partitionCol) :+
         col(s"d.$partitionCol").cast("string").as("_gday") :+ col("_gfile"): _*)
-    val touchedRows = WarehouseTable.prof("merge.fgPlan.touchedCollect") {
-      guardStaleRead(touchedPlan.collect()) }
-    val touched = spark.createDataFrame(
-      java.util.Arrays.asList(touchedRows: _*), touchedPlan.schema)
-    // driver-side dedup of the (day, file) pairs: batch-bounded, and a
-    // distinct() would cost an exchange plus an extra AQE job per flush
-    // (job count IS small-flush latency)
-    val matchedFiles: Map[String, Seq[String]] = touchedRows
+    val matchedDest = WarehouseTable.prof("merge.fgPlan.touchedCollect") {
+      guardStaleRead(matchedPlan.collect()) }
+    val matched = spark.createDataFrame(
+      java.util.Arrays.asList(matchedDest: _*), matchedPlan.schema)
+    val files: Map[String, Seq[String]] = matchedDest
       .groupBy(_.getAs[String]("_gday"))
       .map { case (d, rs) =>
         d -> rs.map(_.getAs[String]("_gfile")).distinct.toSeq.sorted }
-    val matchedPaths = matchedFiles.toSeq.flatMap { case (d, names) =>
+    val paths = files.toSeq.flatMap { case (d, names) =>
       names.map(n => s"$dataPath/$partitionCol=$d/$n")
     }
     val destMatched =
-      if (matchedPaths.isEmpty)
+      if (paths.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           snap.add(partitionCol, "string"))
       else guardStaleRead(conformToSchema(spark.read.schema(snap)
-        .option("basePath", dataPath).parquet(matchedPaths: _*), snap))
+        .option("basePath", dataPath).parquet(paths: _*), snap))
     val survivors = destMatched.as("d")
-      .join(broadcast(srcKeys.as("s")), keyCond, "left_anti")
-    val updCond = keyFields.map(f => col(s"m.$f") === col(s"s.key.$f")).reduce(_ && _)
-    val updates = touched.as("m").join(broadcast(live.as("s")), updCond, "inner")
-      .select(
-        keyFields.map(f => col(s"m.`$f`").as(f)) ++
-          srcVal :+
-          col(s"m.$partitionCol").as(partitionCol): _*)
-    val matchedKeys = touched.select(keyFields.map(f => col(s"`$f`")): _*)
-    val insCond = keyFields.map(f => col(s"m.$f") === col(s"s.key.$f")).reduce(_ && _)
-    val inserts = live.as("s").join(broadcast(matchedKeys.as("m")), insCond, "left_anti")
-      .select(
-        keyFields.map(f => col(s"s.key.$f").as(f)) ++
-          srcVal :+
-          stagedSlice("s.").as(partitionCol): _*)
-    (survivors.unionByName(updates).unionByName(inserts), matchedFiles)
+      .join(broadcast(matchKeys.as("s")), keyMatch("d"), "left_anti")
+    (survivors, matched, files)
   }
 
-  /** The preferred merge plan: a full-outer join can never broadcast in
-    * Spark, so [[mergeJoin]] sort-merge-shuffles every scanned dest
-    * partition per flush. Decomposed, each piece broadcast-joins the
-    * (micro-batch-bounded) source side:
-    *
-    *  - survivors: dest rows whose key is NOT in the batch (anti join);
-    *  - updates:   dest ⋈ batch values, row keeps its dest partition;
-    *  - inserts:   batch keys absent from dest (anti vs the matched-key
-    *    set, itself a keys-only bounded scan), routed to their slice.
-    *
-    * Net: the destination is scanned (bounded partitions, map-only) and
-    * never shuffled or sorted — at 100 TB the difference between
-    * streaming the partitions through and spilling them through an
-    * exchange. Semantics identical to [[mergeJoin]]; the oracle gate and
-    * a fallback-equality spec pin that.
+  /** Equality of the `dest`-aliased key columns with the batch's
+    * `s.key` struct fields.
     */
-  private def mergeJoinBroadcast(dest: DataFrame, src: DataFrame,
-      delete: Boolean, snap: StructType): (DataFrame, DataFrame) = {
-    // snapshot-aligned batch values: fields the batch lacks become NULL
-    val srcVal = mergeValueFields(src, snap).map { case (f, inBatch) =>
-      if (inBatch) col(s"s.value.`${f.name}`").as(f.name)
+  private def keyMatch(dest: String): Column =
+    keyFields.map(f => col(s"$dest.$f") === col(s"s.key.$f")).reduce(_ && _)
+
+  /** The op's snapshot value fields from a batch's `value` struct
+    * (qualified by `prefix`), fields the batch lacks as typed NULLs
+    * ([[mergeValueFields]]).
+    */
+  private def batchValues(batch: DataFrame, snap: StructType,
+      prefix: String): Seq[Column] =
+    mergeValueFields(batch, snap).map { case (f, inBatch) =>
+      if (inBatch) col(s"${prefix}value.`${f.name}`").as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }
-    val keyCond = keyFields.map(f => col(s"d.$f") === col(s"s.key.$f")).reduce(_ && _)
-    // no .distinct(): src is latestPerKey output (one row per key), and
-    // an anti join is insensitive to duplicate build rows anyway —
-    // skipping the dedup exchange saves a job round per flush
-    val srcKeys = src.select(col("key"))
-    val survivors = dest.as("d").join(broadcast(srcKeys.as("s")), keyCond, "left_anti")
-    // when delete is off, a (precondition-violating) tombstone updates
-    // matched rows to null values and inserts null-value rows — exactly
-    // the full-outer plan's behavior
-    val live = if (delete) src.where(col("value").isNotNull) else src
-    // checkpointed (≤ batch rows): referenced by the union AND as the
-    // matched-key set below — one dest scan serves both. Named and
-    // returned so merge()'s finally frees the blocks by handle once the
-    // flush's staging write (the last consumer) completes.
-    val updates = dest.as("d").join(broadcast(live.as("s")), keyCond, "inner")
-      .select(
-        keyFields.map(f => col(s"d.$f").as(f)) ++
-          srcVal :+
-          col(s"d.$partitionCol").as(partitionCol): _*)
-      .transform(graft.util.GraftCache.namedCheckpoint(s"WarehouseTable.updates@$root"))
-    // keys straight off the checkpoint, duplicates tolerated (anti join
-    // below) — bounded by matched dest rows ≈ batch keys
-    val matchedKeys = updates.select(keyFields.map(col): _*)
-    val insCond = keyFields.map(f => col(s"m.$f") === col(s"s.key.$f")).reduce(_ && _)
-    val inserts = live.as("s").join(broadcast(matchedKeys.as("m")), insCond, "left_anti")
-      .select(
-        keyFields.map(f => col(s"s.key.$f").as(f)) ++
-          srcVal :+
-          stagedSlice("s.").as(partitionCol): _*)
-    (survivors.unionByName(updates).unionByName(inserts), updates)
-  }
+
+  /** Batch rows as new dest rows, routed to their slice day. */
+  private def batchRows(rows: DataFrame, snap: StructType): DataFrame =
+    rows.select(keyFields.map(f => col(s"key.$f").as(f)) ++
+      batchValues(rows, snap, "") :+ stagedSlice("").as(partitionCol): _*)
 
   /** Non-key fields of the op's schema snapshot, each flagged with
     * whether the batch's `value` struct carries it. Fields the batch
@@ -1222,158 +1204,6 @@ final class WarehouseTable private (
     case None => sliceExpr(col(s"${prefix}partitionTime"))
   }
 
-  /** J3 delete-only MERGE against the table (`MergeQueries.java:310-412`):
-    * tombstone-fence the batch, delete dest rows whose key has a
-    * surviving tombstone, then plain-insert every surviving
-    * non-tombstone row into its `date(partitionTime)` partition
-    * (duplicates allowed, as in the reference's delete-only mode). The
-    * dest scan is bounded exactly like [[merge]]: batch days + bloom
-    * candidate partitions.
-    */
-  def mergeDeleteOnly(staged: DataFrame): Seq[String] = {
-    val fenced = MergeOps.tombstoneFence(staged)
-    fenced.cache()
-    try {
-      // conflict window opens before the dest read (claimCommit doc)
-      val readBase = currentVersion
-      val probe = fenced.select(stagedSlice("").as("d"),
-        xxhash64(keyString(keyFields.map(f => col(s"key.$f")))).as("h"),
-        col("value").isNull.as("tomb")).distinct()
-      // one capped collect doubles as the emptiness check: touched days
-      // from all rows, probe hashes from the tombstones (only deletes
-      // need to find existing rows). Over the driver-heap gate the BULK
-      // path below keeps every per-row structure distributed (merge doc)
-      val hashGate = math.min(
-        WarehouseTable.appendHashCollectMaxRows, (Int.MaxValue - 1).toLong)
-      val dayHash = probe.limit(hashGate.toInt + 1).collect()
-      if (dayHash.isEmpty) return Seq.empty // nothing survives the fence
-      val bulk = dayHash.length > hashGate
-      val (batchDays, candDays, liveDayHashes) =
-        if (!bulk) {
-          val tombHashes = dayHash.filter(_.getBoolean(2)).map(_.getLong(1)).distinct
-          // non-tombstone hashes per slice day, for the post-swap bloom
-          // union: delete-only mode plain-inserts every surviving live row
-          val liveByDay = dayHash
-            .filter(r => !r.getBoolean(2) && r.getString(0) != null)
-            .groupBy(_.getString(0)).map { case (d, rs) => d -> rs.map(_.getLong(1)) }
-          val bd = dayHash.map(_.getString(0)).filter(_ != null).distinct.toSeq
-          (bd, bloomCandidateDays(tombHashes, bd), liveByDay)
-        } else {
-          WarehouseTable.bulkMergePaths.incrementAndGet()
-          val bd = probe.select(col("d")).where(col("d").isNotNull)
-            .distinct().collect().map(_.getString(0)).toSeq
-          // only tombstones need to FIND existing rows (inserts are
-          // pure additions to their slice days, already in bd)
-          val tombKeysDf = fenced.where(col("value").isNull)
-            .select(keyFields.map(f => col(s"key.$f").as(f)): _*)
-          (bd, exactCandidateDays(tombKeysDf, bd), Map.empty[String, Array[Long]])
-        }
-      val tombSrc = fenced.where(col("value").isNull)
-      val days = (batchDays ++ candDays).distinct.sorted
-
-      // one schema snapshot for the whole op (merge doc): dest read and
-      // insert columns must agree under a concurrent evolveSchema
-      val snap = schema
-      val keyCond = keyFields.map(f => col(s"d.$f") === col(s"s.$f")).reduce(_ && _)
-      // no .distinct(): the fence leaves ~one tombstone per key, an
-      // anti join is insensitive to duplicate build rows, and skipping
-      // the dedup exchange keeps the write a one-round job
-      val tombKeys = tombSrc.select(keyFields.map(f => col(s"key.$f").as(f)): _*)
-      val inserts = fenced.where(col("value").isNotNull).select(
-        keyFields.map(f => col(s"key.$f").as(f)) ++
-          mergeValueFields(fenced, snap).map { case (f, inBatch) =>
-            if (inBatch) col(s"value.`${f.name}`").as(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          } :+
-          stagedSlice("").as(partitionCol): _*)
-      // FILE-granular (merge doc): only files actually HOLDING a
-      // tombstoned key rewrite; inserts are pure additions. Whole-day
-      // fallback on the exact-bloom tightening/heal flushes, tables
-      // with no commit yet, and bulk batches (whose tombstone key set
-      // must not broadcast).
-      val fileGranular = !bulk && readBase > 0L &&
-        (readBase + 1) % WarehouseTable.bloomRebuildEvery != 0 &&
-        !days.exists(bloomNeedsHeal)
-      if (fileGranular) {
-        // one keys-only pruned scan yields the matched (day, file)
-        // pairs; batch-bounded collect, driver-side dedup (no exchange)
-        val destKeys = readCommitted(days, snap).select(
-          keyFields.map(f => col(s"`$f`")) :+ col(partitionCol) :+
-            element_at(split(input_file_name(), "/"), -1).as("_gfile"): _*)
-        val matchedFiles: Map[String, Seq[String]] =
-          guardStaleRead(destKeys.as("d")
-            .join(broadcast(tombKeys.as("s")), keyCond, "inner")
-            .select(col(s"d.$partitionCol").cast("string"), col("_gfile"))
-            .collect())
-            .groupBy(_.getString(0))
-            .map { case (d, rs) => d -> rs.map(_.getString(1)).distinct.toSeq.sorted }
-        val matchedPaths = matchedFiles.toSeq.flatMap { case (d, names) =>
-          names.map(n => s"$dataPath/$partitionCol=$d/$n") }
-        val destMatched =
-          if (matchedPaths.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              snap.add(partitionCol, "string"))
-          else guardStaleRead(conformToSchema(spark.read.schema(snap)
-            .option("basePath", dataPath).parquet(matchedPaths: _*), snap))
-        val survivors = destMatched.as("d")
-          .join(broadcast(tombKeys.as("s")), keyCond, "left_anti")
-        val merged = survivors.unionByName(inserts)
-        val staging = s"$root/.merge-${UUID.randomUUID().toString.take(8)}"
-        val preExisting = days.filter(d =>
-          fs.exists(new Path(s"$dataPath/$partitionCol=$d"))).toSet
-        guardStaleRead(clusteredWrite(merged).write
-          .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging))
-        val stagedFiles = stagedDayFiles(staging)
-        val affected = (matchedFiles.keySet ++ stagedFiles.keySet).toSeq.sorted
-        val v = claimCommit("merge-delete", days, readBase + 1)
-        // carry-forward base AFTER the claim, from finalize's own rebase
-        // manifest (vacuum-race argument at the merge call site)
-        val base = manifestBase(v)
-        val newDayFiles = affected.map { d =>
-          val gone = matchedFiles.getOrElse(d, Seq.empty).toSet
-          d -> (base.getOrElse(d, Seq.empty).filterNot(gone.contains) ++
-            stagedFiles.getOrElse(d, Seq.empty))
-        }.toMap
-        swapFilesGranular(staging,
-          affected.map(d => d -> matchedFiles.getOrElse(d, Seq.empty)).toMap, v)
-        unionBloomsAfterSwap(days, liveDayHashes, preExisting, v)
-        finalizeCommit("merge-delete", affected, v, newDayFiles)
-        expireOldPartitions()
-        autoVacuum()
-        return days
-      }
-      val dest = readCommitted(days, snap)
-      // batch-bounded key set broadcast → dest is never shuffled here
-      // either; a bulk batch drops the hint (shuffled anti-join — the
-      // key set no longer fits an executor)
-      val tombBuild = if (bulk) tombKeys.as("s") else broadcast(tombKeys.as("s"))
-      val survivors = dest.as("d").join(tombBuild, keyCond, "left_anti")
-      val merged = survivors.unionByName(inserts)
-
-      val staging = s"$root/.merge-${UUID.randomUUID().toString.take(8)}"
-      val preExisting = days.filter(d =>
-        fs.exists(new Path(s"$dataPath/$partitionCol=$d"))).toSet
-      guardStaleRead(clusteredWrite(merged).write
-        .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging))
-      val stagedFiles = stagedDayFiles(staging)
-      val exactBlooms =
-        if (bulk || (readBase + 1) % WarehouseTable.bloomRebuildEvery == 0 ||
-            days.exists(bloomNeedsHeal))
-          Some(stagedExactBlooms(staging))
-        else None
-      val v = claimCommit("merge-delete", days, readBase + 1)
-      swapPartitions(staging, days, v)
-      exactBlooms match {
-        case Some(bs) => writeExactBlooms(days, bs, v)
-        case None => unionBloomsAfterSwap(days, liveDayHashes, preExisting, v)
-      }
-      finalizeCommit("merge-delete", days, v, stagedFiles)
-      expireOldPartitions()
-      autoVacuum()
-      days
-    } finally fenced.unpersist()
-  }
 
   /** Generic SQL `MERGE INTO` executor (the [[graft.plans]] DML rule's
     * engine; programmatic callers welcome too). Unlike [[merge]] — the
@@ -1552,30 +1382,29 @@ final class WarehouseTable private (
     if (days.isEmpty) { fs.delete(new Path(staging), true); return Seq.empty }
     // exact blooms: arbitrary updates/deletes make union-maintenance
     // unsound here, and the staging IS the touched days' new generation
-    val exactBlooms = stagedExactBlooms(staging)
+    val blooms = exactBlooms(Seq(staging -> stagedFiles))
     val v = claimCommit("merge-into", days, readBase + 1)
     swapPartitions(staging, days, v)
-    writeExactBlooms(days, exactBlooms, v)
+    writeExactBlooms(days, blooms, v)
     finalizeCommit("merge-into", days, v, stagedFiles)
     expireOldPartitions()
     autoVacuum()
     days
   }
 
-  /** The shuffle fallback for over-ceiling batches: a pruned full-outer
-    * merge join (sort-merge — full-outer cannot broadcast). Updates keep
-    * the dest row's partition day; inserts get their slice.
+  /** The whole-day plan for bulk and over-ceiling batches: a pruned
+    * full-outer merge join (sort-merge — full-outer cannot broadcast).
+    * Updates keep the dest row's partition day; inserts get their slice.
     */
   private def mergeJoin(dest: DataFrame, src: DataFrame, delete: Boolean,
       snap: StructType): DataFrame = {
-    val keyCond = keyFields.map(f => col(s"d.$f") === col(s"s.key.$f")).reduce(_ && _)
-    val joined = dest.as("d").join(src.as("s"), keyCond, "full_outer")
+    val joined = dest.as("d").join(src.as("s"), keyMatch("d"), "full_outer")
     val srcPresent = col("s.key").isNotNull
     val base =
       if (delete) joined.where(!(srcPresent && col("s.value").isNull))
       else joined
     // matched rows take the batch value for every snapshot field (absent
-    // batch fields relax to NULL — same as the broadcast plan);
+    // batch fields relax to NULL — same as the file-granular plan);
     // survivors keep their dest values
     base.select(
       keyFields.map(f => coalesce(col(s"s.key.$f"), col(s"d.$f")).as(f)) ++
@@ -1605,16 +1434,6 @@ final class WarehouseTable private (
   private def keyString(cols: Seq[Column]): Column =
     concat_ws("\u0001", cols.map(_.cast("string")): _*)
 
-  /** Rebuild the key blooms of the given partitions from current data
-    * (called after every write that touches them) in a SINGLE job: one
-    * scan of the touched partitions, one `groupBy(day)` with Spark's
-    * native `BloomFilterAggregate` (the codegen'd aggregate behind
-    * runtime row-group filtering) over `xxhash64(key)`, one small collect
-    * of (day, bloomBytes). The aggregate's buffer lives as an in-memory
-    * sketch during partial aggregation and serializes with the sketch's
-    * own compact `writeTo` — no Java-serialization round-trips.
-    * Partitions that no longer exist get their bloom removed.
-    */
   /** The shared bloom-building aggregate: Spark's native (codegen'd)
     * `BloomFilterAggregate` over `xxhash64(key)`, sized identically for
     * every bloom this table writes — identical sizing is what makes two
@@ -1635,35 +1454,6 @@ final class WarehouseTable private (
   private def bloomAggColumn: Column =
     bloomAgg(xxhash64(keyString(keyFields.map(col))))
 
-  /** Post-swap bloom maintenance for the merge paths WITHOUT re-reading
-    * the rewritten files: the batch's per-day live key hashes — already
-    * on the driver from the probe's day-collect — are unioned into each
-    * rewritten day's bloom, driver-side, zero jobs.
-    *
-    * Valid because a day's post-merge keyset is a subset of
-    * (old keyset ∪ batch keys): survivors and updates were in the old
-    * bloom, inserts are batch keys routed to their slice day, and
-    * deletes only REMOVE keys. The union therefore stays a SUPERSET of
-    * the day's keys — the only property [[bloomCandidateDays]] needs
-    * for correctness. Deleted keys linger as stale bits, costing
-    * candidate scans (never wrong results); staleness is bounded by the
-    * periodic exact rebuild — every [[WarehouseTable.bloomRebuildEvery]]
-    * -th committed version runs [[refreshBlooms]] instead, as does any
-    * [[compactPartitions]].
-    *
-    * Per-day cases: day dir gone after the swap → bloom removed; fresh
-    * day → bloom = exactly the batch hashes routed there; pre-existing
-    * day with no batch hashes (pure bloom-candidate that only kept/lost
-    * rows) → old bloom untouched (already a superset); pre-existing +
-    * batch hashes → old ∪ batch. Any day whose existing bloom is
-    * unreadable, of an unknown format, or size-incompatible falls back
-    * to the exact rebuild — the same self-healing contract as [[upsertBlooms]].
-    */
-  /** Build per-day blooms on the driver from raw (day, key-hash) rows —
-    * bit-identical sizing to [[bloomAgg]], so the results stay
-    * mergeable with aggregate-built blooms. O(batch) input by the
-    * callers' byte gates; rows with a null day are skipped.
-    */
   /** Total record count of the given parquet files, straight from
     * their footers — O(files) driver-side metadata reads, no data
     * pages. Feeds the bloom-fold row gate.
@@ -1676,6 +1466,11 @@ final class WarehouseTable private (
       try r.getRecordCount finally r.close()
     }.sum
 
+  /** Build per-day blooms on the driver from raw (day, key-hash) rows —
+    * bit-identical sizing to [[bloomAgg]], so the results stay
+    * mergeable with aggregate-built blooms. O(batch) input by the
+    * callers' byte gates; rows with a null day are skipped.
+    */
   private def driverDayBlooms(
       pairs: Array[org.apache.spark.sql.Row]): Seq[(String, Array[Byte])] = {
     val items = WarehouseTable.bloomExpectedItems
@@ -1689,32 +1484,37 @@ final class WarehouseTable private (
       }.toSeq
   }
 
-  /** EXACT per-day blooms of a staged swap output, aggregated from the
-    * PRIVATE staging dir — the replacement for rebuilding from live
-    * dirs. Two properties matter: the distributed scan runs BEFORE the
-    * caller claims its commit (advisor-found: a rebuild held the
-    * pending claim long enough to time out every concurrent
-    * committer's claim wait), and it reads only this writer's staging
-    * files, so no concurrent swap can race it (a post-finalize rebuild
-    * over live dirs could overwrite a newer merge's bloom with stale
-    * content that misses its keys — a superset violation). The staged
-    * output IS the touched days' complete new generation, so the
-    * result is exact; the caller writes it driver-side in-claim via
+  /** EXACT per-day key blooms of a swap's new file sets, in ONE
+    * aggregation over the key columns only. `groups` pairs a base dir
+    * holding `_pday=<day>/` subdirs with day → file names under it: a
+    * whole-day swap passes its staged files; a file-granular flush adds
+    * the files it carries forward in `data/`. Two properties matter: the
+    * distributed scan runs BEFORE the caller claims its commit (a
+    * rebuild inside the claim held it long enough to time out every
+    * concurrent committer's claim wait), and it reads
+    * only the caller's private staging files plus committed files the
+    * claim walk guards (a commit replacing one aborts the caller's
+    * claim), so no concurrent swap can race it into a stale bloom (a
+    * post-finalize rebuild over live dirs could overwrite a newer
+    * merge's bloom with content missing its keys — a superset
+    * violation). The caller writes the result driver-side in-claim via
     * [[writeExactBlooms]] (O(days) metadata writes, microseconds).
     */
-  private def stagedExactBlooms(staging: String): Map[String, Array[Byte]] = {
-    val dayDirs = fs.listStatus(new Path(staging)).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$partitionCol="))
-      .filter(dir => listDayFiles(dir.getPath).nonEmpty)
-    if (dayDirs.isEmpty) return Map.empty
+  private def exactBlooms(
+      groups: Seq[(String, Map[String, Seq[String]])]): Map[String, Array[Byte]] = {
     val keySet = keyFields.toSet
     val keySchema = StructType(schema.fields.filter(f => keySet.contains(f.name)))
-    spark.read.option("basePath", staging)
-      .schema(keySchema.add(StructField(partitionCol, StringType)))
-      .parquet(dayDirs.map(_.getPath.toString): _*)
+      .add(StructField(partitionCol, StringType))
+    val reads = groups.flatMap { case (base, files) =>
+      val paths = files.toSeq.flatMap { case (d, names) =>
+        names.map(n => s"$base/$partitionCol=$d/$n") }
+      if (paths.isEmpty) None
+      else Some(spark.read.option("basePath", base).schema(keySchema).parquet(paths: _*))
+    }
+    if (reads.isEmpty) Map.empty
+    else guardStaleRead(reads.reduce(_ unionByName _)
       .groupBy(col(partitionCol).cast("string").as("d"))
-      .agg(bloomAggColumn.as("bloom")).collect()
+      .agg(bloomAggColumn.as("bloom")).collect())
       .map(r => (r.getString(0), r.getAs[Array[Byte]](1))).toMap
   }
 
@@ -1875,12 +1675,11 @@ final class WarehouseTable private (
     if (wrote.isEmpty) dropBlooms(days) // lease timeout: conservative
   }
 
-  /** A touched pre-existing day whose bloom cannot take the driver-side
+  /** A scanned pre-existing day whose bloom cannot take the driver-side
     * union — missing, or a header without the current magic. Such a
-    * flush switches to the exact staged-bloom path, which heals the day
-    * immediately (the old in-claim refreshBlooms contract) while
-    * keeping distributed work out of the claim window. Header-only
-    * probe: 4 bytes, not the whole bloom.
+    * flush writes exact blooms ([[mergeFlush]]), which heals the day
+    * immediately while keeping distributed work out of the claim
+    * window. Header-only probe: 4 bytes, not the whole bloom.
     */
   private def bloomNeedsHeal(d: String): Boolean = {
     if (!fs.exists(new Path(s"$dataPath/$partitionCol=$d"))) return false
@@ -1900,8 +1699,32 @@ final class WarehouseTable private (
     }
   }
 
+  /** Post-swap bloom maintenance for the merge flush WITHOUT re-reading
+    * the rewritten files: the batch's per-day insert key hashes — already
+    * on the driver from the probe's day-collect — are unioned into each
+    * rewritten day's bloom, driver-side, zero jobs.
+    *
+    * Valid because a day's post-merge keyset is a subset of
+    * (old keyset ∪ batch keys): survivors and updates were in the old
+    * bloom, inserts are batch keys routed to their slice day, and
+    * deletes only REMOVE keys. The union therefore stays a SUPERSET of
+    * the day's keys — the only property [[bloomCandidateDays]] needs
+    * for correctness. Deleted keys linger as stale bits, costing
+    * candidate scans (never wrong results); staleness is bounded by the
+    * periodic exact rebuild — every [[WarehouseTable.bloomRebuildEvery]]
+    * -th committed version's flush writes [[exactBlooms]] instead, as
+    * does any [[compactPartitions]].
+    *
+    * Per-day cases: day dir gone after the swap → bloom removed; fresh
+    * day → bloom = exactly the batch hashes routed there; pre-existing
+    * day with no batch hashes (pure bloom-candidate that only kept/lost
+    * rows) → old bloom untouched (already a superset); pre-existing +
+    * batch hashes → old ∪ batch. Any day whose existing bloom is
+    * unreadable, of an unknown format, or size-incompatible loses it
+    * (missing reads as always-candidate) until the next exact flush.
+    */
   private def unionBloomsAfterSwap(days: Seq[String],
-      liveDayHashes: Map[String, Array[Long]],
+      insertHashes: Map[String, Array[Long]],
       preExisting: Set[String], stamp: Long): Unit = {
     fs.mkdirs(new Path(bloomDir))
     val items = WarehouseTable.bloomExpectedItems
@@ -1918,7 +1741,7 @@ final class WarehouseTable private (
         if (fs.exists(bloomPath)) fs.delete(bloomPath, false)
         false // day emptied by the merge: no bloom, nothing to rebuild
       } else {
-        val hashes = liveDayHashes.getOrElse(d, Array.empty[Long])
+        val hashes = insertHashes.getOrElse(d, Array.empty[Long])
         if (!preExisting.contains(d)) { writeBloom(bloomPath, batchBloom(hashes)); false }
         else WarehouseTable.readVersionedBloom(fs, bloomPath) match {
           case None => true // missing/unreadable existing bloom: rebuild
@@ -1939,6 +1762,16 @@ final class WarehouseTable private (
     dropBlooms(rebuild)
   }
 
+  /** Rebuild the key blooms of the given partitions from their live
+    * data (the append path's fallback, a clone's baseline) in a SINGLE
+    * job: one scan of the touched partitions, one `groupBy(day)` with
+    * Spark's native `BloomFilterAggregate` (the codegen'd aggregate
+    * behind runtime row-group filtering) over `xxhash64(key)`, one small
+    * collect of (day, bloomBytes). The aggregate's buffer lives as an in-memory
+    * sketch during partial aggregation and serializes with the sketch's
+    * own compact `writeTo` — no Java-serialization round-trips.
+    * Partitions that no longer exist get their bloom removed.
+    */
   private def refreshBlooms(days: Seq[String], stamp: Long): Unit = {
     val existing = days.filter(d => fs.exists(new Path(s"$dataPath/$partitionCol=$d")))
     days.filterNot(existing.contains).foreach { d =>
@@ -2114,14 +1947,6 @@ final class WarehouseTable private (
 
   // ---- compaction (table maintenance) ----
 
-  /** Rewrite the given partitions' files through the clustering sort
-    * (write-new-then-swap, blooms refreshed). Micro-batch appends
-    * accumulate one small batch-keyed file set per flush; over days of
-    * streaming that degrades scans (file-open overhead) and defeats
-    * min/max skipping. Periodic compaction restores the layout — the
-    * maintenance job BigQuery's managed storage performs implicitly.
-    * Returns the partitions rewritten.
-    */
   /** SHALLOW clone — the zero-copy sibling of [[cloneTo]] (which
     * deep-clones by rewriting rows): a new independent table over the
     * SAME data bytes.
@@ -2191,6 +2016,14 @@ final class WarehouseTable private (
     }
   }
 
+  /** Rewrite the given partitions' files through the clustering sort
+    * (write-new-then-swap, blooms refreshed). Micro-batch appends
+    * accumulate one small batch-keyed file set per flush; over days of
+    * streaming that degrades scans (file-open overhead) and defeats
+    * min/max skipping. Periodic compaction restores the layout — the
+    * maintenance job BigQuery's managed storage performs implicitly.
+    * Returns the partitions rewritten.
+    */
   def compactPartitions(days: Seq[String] = listDays()): Seq[String] = {
     val existing = days.filter(d => fs.exists(new Path(s"$dataPath/$partitionCol=$d")))
     if (existing.isEmpty) return Seq.empty
@@ -2202,13 +2035,13 @@ final class WarehouseTable private (
     val stagedFiles = stagedDayFiles(staging)
     // compaction is the designated tightening point for the stale bits
     // the merge-path bloom union leaves behind: ALWAYS exact, computed
-    // from the private staging dir before the claim (stagedExactBlooms
+    // from the private staging dir before the claim (exactBlooms
     // doc — no distributed work inside the claim window, no race with
     // concurrent swaps)
-    val exactBlooms = stagedExactBlooms(staging)
+    val blooms = exactBlooms(Seq(staging -> stagedFiles))
     val v = claimCommit("compact", existing, readBase + 1)
     swapPartitions(staging, existing, v)
-    writeExactBlooms(existing, exactBlooms, v)
+    writeExactBlooms(existing, blooms, v)
     finalizeCommit("compact", existing, v, stagedFiles)
     autoVacuum()
     existing
@@ -2543,7 +2376,7 @@ final class WarehouseTable private (
     val stagedFiles = stagedDayFiles(staging)
     // exact blooms from the private staging dir — the new generation IS
     // the staged content, so the probe filter is exact from version one
-    val exactBlooms = stagedExactBlooms(staging)
+    val blooms = exactBlooms(Seq(staging -> stagedFiles))
     var attempt = 0
     while (true) {
       val readBase = currentVersion
@@ -2558,7 +2391,7 @@ final class WarehouseTable private (
       val extra = manifestBase(v).keySet -- days
       if (extra.isEmpty) {
         swapPartitions(staging, days, v)
-        writeExactBlooms(days, exactBlooms, v)
+        writeExactBlooms(days, blooms, v)
         finalizeCommit("overwrite", days, v, stagedFiles)
         expireOldPartitions()
         autoVacuum()
@@ -2638,7 +2471,7 @@ final class WarehouseTable private (
           "did not name")
     }
     // blooms BEFORE the swap loop: swapPartitions deletes the staging dir
-    val exactBlooms = stagedExactBlooms(staging)
+    val blooms = exactBlooms(Seq(staging -> stagedFiles))
     var attempt = 0
     while (true) {
       val readBase = currentVersion
@@ -2648,7 +2481,7 @@ final class WarehouseTable private (
       val extra = manifestBase(v).keySet.filter(pred) -- days
       if (extra.isEmpty) {
         swapPartitions(staging, days, v)
-        writeExactBlooms(days, exactBlooms, v)
+        writeExactBlooms(days, blooms, v)
         finalizeCommit("overwrite", days, v, stagedFiles)
         expireOldPartitions()
         autoVacuum()
@@ -2688,11 +2521,11 @@ final class WarehouseTable private (
     */
   private def commitStagedSliceSwap(staging: String,
       stagedFiles: Map[String, Seq[String]], days: Seq[String]): Seq[String] = {
-    val exactBlooms = stagedExactBlooms(staging)
+    val blooms = exactBlooms(Seq(staging -> stagedFiles))
     val readBase = currentVersion
     val v = claimCommit("overwrite", days, readBase + 1)
     swapPartitions(staging, days, v)
-    writeExactBlooms(days, exactBlooms, v)
+    writeExactBlooms(days, blooms, v)
     finalizeCommit("overwrite", days, v, stagedFiles)
     expireOldPartitions()
     autoVacuum()
@@ -2731,8 +2564,8 @@ final class WarehouseTable private (
     * removed from `data/`. Replaced generations are renamed (not
     * deleted) into `_graft/history/v<archiveVersion>/` so snapshot reads
     * ([[readAsOf]]) stay serviceable until [[vacuum]].
-    */
-  /** Multi-writer note (soak-spec pinned): the swap MOVES the old
+    *
+    * Multi-writer note (soak-spec pinned): the swap MOVES the old
     * generation into the version archive, so a live-path reader whose
     * plan listed files before the swap fails transiently with
     * `FAILED_READ.FILE_NOT_EXIST`. No data is lost — the files are in
@@ -2764,39 +2597,31 @@ final class WarehouseTable private (
     fs.delete(new Path(staging), true)
   }
 
-  /** File-granular sibling of [[swapPartitions]] for the predicate DML
-    * rewrites: inside each touched day, ONLY the `replaced` files are
-    * renamed into the version archive and the staged rewrite renamed
-    * in; every other live file is carried forward untouched —
-    * Delta-class write amplification (an UPDATE matching one file of a
-    * 400-file day moves one file, not 400). The archive day dir gets a
-    * `_partial` marker FIRST (before any rename): it is the
-    * crash-recovery journal discriminator that tells
-    * [[recoverCrashedClaim]] to roll back file-by-file instead of
-    * restoring a whole-day generation, and underscore-prefixed names
-    * are invisible to every file listing ([[listDayFiles]]) and to
-    * [[readAsOf]]'s archive resolution.
+  /** File-granular sibling of [[swapPartitions]] for the merge flush,
+    * the predicate DML rewrites and small-file compaction: inside each
+    * touched day, ONLY the `replaced` files are renamed into the version
+    * archive and the staged rewrite renamed in; every other live file is
+    * carried forward untouched — Delta-class write amplification (an
+    * UPDATE matching one file of a 400-file day moves one file, not 400).
+    * An empty `replaced` list is a pure-addition day (a merge inserting
+    * into — or creating — a day with no matched files).
+    *
+    * Before any archive day dir exists, [[journalLiveFiles]] records
+    * every touched day's pre-swap live files in ONE version-level
+    * journal: its presence tells [[recoverCrashedClaim]] to roll the
+    * version's days back file by file instead of restoring whole-day
+    * generations. Underscore-prefixed names are invisible to every file
+    * listing ([[listDayFiles]]) and to [[readAsOf]]'s archive resolution.
     */
   private[sources] def swapFilesGranular(staging: String,
       replaced: Map[String, Seq[String]], archiveVersion: Long): Unit = {
+    journalLiveFiles(replaced.keys.toSeq, archiveVersion)
     fs.mkdirs(new Path(dataPath))
     val archDir = new Path(s"$historyDir/v$archiveVersion")
     replaced.toSeq.sortBy(_._1).foreach { case (d, names) =>
       val liveDir = new Path(s"$dataPath/$partitionCol=$d")
       val archDayDir = new Path(archDir, s"$partitionCol=$d")
       fs.mkdirs(archDayDir)
-      // an empty `names` list is a pure-addition day (a merge inserting
-      // into — or creating — a day with no matched files): the marker
-      // still journals it, so crash recovery knows to sweep the
-      // renamed-in additions and restore nothing. The live-file journal
-      // goes FIRST (see [[WarehouseTable.LiveSwapJournal]]): recovery
-      // keys on the marker, so marker-present implies journal-complete
-      writeMetaString(spark,
-        new Path(archDayDir, WarehouseTable.LiveSwapJournal).toString,
-        listDayFiles(liveDir).mkString("\n"))
-      writeMetaString(spark,
-        new Path(archDayDir, WarehouseTable.PartialSwapMarker).toString,
-        names.mkString("\n"))
       names.foreach(n =>
         fs.rename(new Path(liveDir, n), new Path(archDayDir, n)))
       val stagedDay = new Path(s"$staging/$partitionCol=$d")
@@ -2813,6 +2638,19 @@ final class WarehouseTable private (
     }
     fs.delete(new Path(staging), true)
   }
+
+  /** The journal step of [[swapFilesGranular]]: write
+    * `history/v<archiveVersion>/_prelive` ([[WarehouseTable.LiveSwapJournal]]),
+    * one `day<TAB>file` line per file live in each of `days` the instant
+    * before the swap's first archive dir or rename.
+    */
+  private[sources] def journalLiveFiles(days: Seq[String],
+      archiveVersion: Long): Unit =
+    writeMetaString(spark,
+      s"$historyDir/v$archiveVersion/${WarehouseTable.LiveSwapJournal}",
+      days.sorted.flatMap(d =>
+        listDayFiles(new Path(s"$dataPath/$partitionCol=$d")).map(n => s"$d\t$n"))
+        .mkString("\n"))
 
   // ---- snapshots / time travel ----
 
@@ -3106,15 +2944,23 @@ final class WarehouseTable private (
     *  - day absent: the swap never reached it; the live generation is
     *    the intact pre-claim one.
     *
-    * Blooms of rolled-back days are refreshed (the crashed writer may
-    * have refreshed them against the new generation), the archive dir
-    * is removed — [[vacuum]] never counts an orphaned generation — and
-    * the claim file is deleted, freeing its version number. Concurrent
-    * recoveries are safe: renames/deletes are first-wins idempotent and
-    * the subsequent re-claim goes through the atomic create-if-absent.
-    * The crashed writer's staging dir (`.merge-*`/`.compact-*`/…)
-    * cannot be attributed to a claim and is left behind — it lives
-    * outside `data/`, invisible to every read path.
+    * A version whose archive dir holds the [[swapFilesGranular]] journal
+    * ([[WarehouseTable.LiveSwapJournal]]) swapped file by file: each
+    * processed day rolls back by deleting the live files the journal
+    * does not list (the torn new generation — plus any concurrent
+    * append's uncommitted files, which abort on the rolled-back overlap
+    * exactly like the whole-day path) and moving its archived files back.
+    *
+    * Blooms of rolled-back days are dropped (the crashed writer may have
+    * written them against the new generation; missing reads as
+    * always-candidate), the archive dir is removed — [[vacuum]] never
+    * counts an orphaned generation — and the claim file is deleted,
+    * freeing its version number. Concurrent recoveries are safe:
+    * renames/deletes are first-wins idempotent and the subsequent
+    * re-claim goes through the atomic create-if-absent. The crashed
+    * writer's staging dir (`.merge-*`/`.compact-*`/…) cannot be
+    * attributed to a claim and is left behind — it lives outside
+    * `data/`, invisible to every read path.
     */
   private def recoverCrashedClaim(v: Long): Unit = {
     val archDir = new Path(s"$historyDir/v$v")
@@ -3123,48 +2969,39 @@ final class WarehouseTable private (
       else fs.listStatus(archDir).toSeq.map(_.getPath.getName)
         .filter(_.startsWith(s"$partitionCol="))
         .map(_.stripPrefix(s"$partitionCol="))
+    // day → files live before a file-granular swap; None: whole-day swap
+    val journal = new Path(archDir, WarehouseTable.LiveSwapJournal)
+    val preLive: Option[Map[String, Set[String]]] =
+      if (!fs.exists(journal)) None
+      else Some(readMetaString(spark, journal.toString).linesIterator
+        .map(_.split("\t", 2)).collect { case Array(d, n) => d -> n }
+        .toSeq.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).toSet })
     processed.foreach { d =>
       val live = new Path(s"$dataPath/$partitionCol=$d")
       val arch = new Path(archDir, s"$partitionCol=$d")
-      if (fs.exists(new Path(arch, WarehouseTable.PartialSwapMarker))) {
-        // FILE-granular swap ([[swapFilesGranular]]): only the archived
-        // files left the live dir; the rest of the generation never
-        // moved. Roll back by deleting live files NOT known pre-swap
-        // (the torn new generation — plus any concurrent append's
-        // uncommitted files, which abort on the rolled-back overlap
-        // exactly like the whole-day path) and moving the archived
-        // files back. "Known" comes from the swap's own pre-rename
-        // live-file journal ([[WarehouseTable.LiveSwapJournal]]), which
-        // is written before the marker — a marker without it is damage
-        // no rollback can undo exactly, so recovery stops loudly.
-        val journal = new Path(arch, WarehouseTable.LiveSwapJournal)
-        if (!fs.exists(journal))
-          throw new IllegalStateException(
-            s"cannot roll back crashed claim v$v: $arch has a " +
-              s"${WarehouseTable.PartialSwapMarker} marker but no $journal")
-        val known: Set[String] =
-          readMetaString(spark, journal.toString).linesIterator
-            .filter(_.nonEmpty).toSet
-        if (fs.exists(live))
-          fs.listStatus(live).toSeq.filter { st =>
-            val n = st.getPath.getName
-            st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-              !known.contains(n)
-          }.foreach(st => fs.delete(st.getPath, false))
-        else fs.mkdirs(live)
-        listDayFiles(arch).foreach { n =>
-          fs.rename(new Path(arch, n), new Path(live, n)); ()
-        }
-        // a day the crashed swap CREATED (pure-addition marker, no
-        // archived generation): rolling back leaves an empty dir — drop
-        // it so the day reads as never having existed
-        if (fs.exists(live) && fs.listStatus(live).isEmpty)
-          fs.delete(live, true)
-      } else {
-        if (fs.exists(live)) fs.delete(live, true)
-        // a marker (empty) archive dir means the day had no pre-claim
-        // generation — rolling back means the day simply disappears
-        if (listDayFiles(arch).nonEmpty) fs.rename(arch, live)
+      preLive match {
+        case Some(j) =>
+          val known = j.getOrElse(d, Set.empty[String])
+          if (fs.exists(live))
+            fs.listStatus(live).toSeq.filter { st =>
+              val n = st.getPath.getName
+              st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
+                !known.contains(n)
+            }.foreach(st => fs.delete(st.getPath, false))
+          else fs.mkdirs(live)
+          listDayFiles(arch).foreach { n =>
+            fs.rename(new Path(arch, n), new Path(live, n)); ()
+          }
+          // a day the crashed swap CREATED (no archived files): rolling
+          // back leaves an empty dir — drop it so the day reads as never
+          // having existed
+          if (fs.exists(live) && fs.listStatus(live).isEmpty)
+            fs.delete(live, true)
+        case None =>
+          if (fs.exists(live)) fs.delete(live, true)
+          // a marker (empty) archive dir means the day had no pre-claim
+          // generation — rolling back means the day simply disappears
+          if (listDayFiles(arch).nonEmpty) fs.rename(arch, live)
       }
     }
     if (fs.exists(archDir)) fs.delete(archDir, true)
@@ -3763,11 +3600,11 @@ final class WarehouseTable private (
     val stagedFiles = stagedDayFiles(staging)
     // restore CAN resurrect keys the current blooms don't cover:
     // exact blooms from the private staging dir, computed before the
-    // claim (stagedExactBlooms doc)
-    val exactBlooms = stagedExactBlooms(staging)
+    // claim (exactBlooms doc)
+    val blooms = exactBlooms(Seq(staging -> stagedFiles))
     val v = claimCommit("restore", days, readBase + 1)
     swapPartitions(staging, days, v)
-    writeExactBlooms(days, exactBlooms, v)
+    writeExactBlooms(days, blooms, v)
     finalizeCommit("restore", days, v, stagedFiles)
     autoVacuum()
     days
@@ -4446,22 +4283,15 @@ object WarehouseTable {
       Runtime.getRuntime.halt(137)
     }
 
-  /** Marker file inside a version-archive day dir recording that the
-    * archive holds only the REPLACED files of a file-granular swap
-    * ([[WarehouseTable.swapFilesGranular]]), not a whole generation;
-    * its body lists the replaced names. Underscore-prefixed, so every
-    * data-file listing ignores it.
-    */
-  private[sources] val PartialSwapMarker: String = "_partial"
-
-  /** Pre-swap live-file journal a [[swapFilesGranular]] day archive
-    * carries NEXT TO its [[PartialSwapMarker]]: the exact file names
-    * live in the day the instant before the swap's first rename. Crash
-    * recovery rolls back from THIS list — a listing taken after the
-    * torn renames would count the torn new-generation files as known
-    * and resurrect the archived originals alongside their rewrites.
-    * Written BEFORE the marker, so a marker's presence guarantees the
-    * journal is complete; recovery rejects a marker without one.
+  /** Version-level journal of a [[swapFilesGranular]] swap,
+    * `history/v<N>/_prelive`: one `day<TAB>file` line per file live in
+    * each touched day the instant before the swap's first archive dir.
+    * Crash recovery rolls back from THIS list — a listing taken after
+    * the torn renames would count the torn new-generation files as
+    * known and resurrect the archived originals alongside their
+    * rewrites — and its presence alone marks the version's archive as
+    * file-granular: written before any archive day dir exists, so no
+    * crash can leave a processed day without it.
     */
   private[sources] val LiveSwapJournal: String = "_prelive"
 
@@ -4538,13 +4368,6 @@ object WarehouseTable {
   val bloomExpectedItems: Long =
     sys.env.getOrElse("GRAFT_BLOOM_EXPECTED_ITEMS", "1000000").toLong
 
-  /** Cadence of the exact bloom rebuild on the merge paths: merges
-    * union the batch's key hashes into the touched day blooms
-    * driver-side (zero jobs — see `unionBloomsAfterSwap`), which keeps
-    * the superset invariant but lets deleted keys linger as stale bits;
-    * every N-th committed version pays the distributed `refreshBlooms`
-    * re-scan to tighten them. 1 restores rebuild-every-merge.
-    */
   /** Byte gate below which an append collects raw (day, key-hash) pairs
     * to the driver and builds day blooms locally (one cache-read job, no
     * aggregation exchange); above it the distributed bloom aggregation
@@ -4629,15 +4452,25 @@ object WarehouseTable {
   final class CommitIndeterminateException(msg: String, cause: Throwable)
     extends java.io.IOException(msg, cause)
 
+  /** Cadence of the exact bloom rebuild on the merge flush: a flush
+    * unions the batch's key hashes into the touched day blooms
+    * driver-side (zero jobs — see `unionBloomsAfterSwap`), which keeps
+    * the superset invariant but lets deleted keys linger as stale bits;
+    * every N-th committed version's flush pays one distributed
+    * key-column scan of its scanned days' new file sets (`exactBlooms`)
+    * to tighten them. 1 restores rebuild-every-merge.
+    */
   def bloomRebuildEvery: Long =
     math.max(1L, sys.props.get("graft.bloomRebuildEvery")
       .orElse(sys.env.get("GRAFT_BLOOM_REBUILD_EVERY"))
       .getOrElse("16").toLong)
 
-  /** Batch-size ceiling for the broadcast merge plan; above it the merge
-    * falls back to the full-outer sort-merge join. Micro-batches are
-    * bounded by `mergeRecordsThreshold`/`maxOffsetsPerTrigger`, so the
-    * broadcast path is the norm; the ceiling guards ad-hoc bulk merges.
+  /** Batch-size ceiling for the file-granular merge flush, in both
+    * merge modes; above it a batch rewrites its candidate days whole
+    * through the sort-merge join. Micro-batches are bounded by
+    * `mergeRecordsThreshold`/`maxOffsetsPerTrigger`, so the
+    * file-granular flush is the norm; the ceiling guards ad-hoc bulk
+    * merges.
     */
   val broadcastMergeMaxRows: Long =
     sys.env.getOrElse("GRAFT_BROADCAST_MERGE_MAX_ROWS", "1000000").toLong

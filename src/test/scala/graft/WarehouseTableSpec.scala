@@ -250,14 +250,17 @@ class WarehouseTableSpec extends AnyFunSuite {
   test("merge-path bloom union: superset survives deletes; rebuild cadence tightens stale bits") {
     val root = tmpRoot()
     val t = mkTable(root)
-    // day1 holds k=1..3; day2 holds k=9
+    // day1 holds k=1..3 in one file and k=4 in a second; day2 holds k=9
     t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k1", "f1").withColumn("partitionTime", ts(1)))
+    t.append(Seq((4L, "d")).toDF("k1", "f1").withColumn("partitionTime", ts(1)))
     t.append(Seq((9L, "z")).toDF("k1", "f1").withColumn("partitionTime", ts(2)))
-    // v3: tombstone k=3 from a day-5 batch — union path (default
+    def day1Files(): Set[String] = t.readDays(Seq("2024-01-01")).inputFiles
+      .map(_.split('/').last).toSet
+    // v4: tombstone k=3 from a day-5 batch — union path (default
     // cadence): day1 is rewritten without k=3, but its bloom keeps
     // k=3 as a stale bit (the union never removes)
     t.merge(staged(Seq((3L, None, 1L, 5))))
-    assert(t.read().select($"k1").as[Long].collect().toSet == Set(1L, 2L, 9L))
+    assert(t.read().select($"k1").as[Long].collect().toSet == Set(1L, 2L, 4L, 9L))
     // superset invariant: an update to k=1 still finds day1
     val days1 = t.merge(staged(Seq((1L, Some("a2"), 2L, 5))))
     assert(days1.contains("2024-01-01"))
@@ -267,15 +270,24 @@ class WarehouseTableSpec extends AnyFunSuite {
     assert(days2.contains("2024-01-01"))
     // exact-rebuild cadence: force rebuild-every-commit, touch day1,
     // and the same probe no longer scans day1 (stale k=3 bit gone)
+    // — without rewriting the whole day: the file holding only k=4
+    // carries forward under its own name
     sys.props("graft.bloomRebuildEvery") = "1"
     try {
+      val k4File = t.read().where($"k1" === 4L).select(input_file_name())
+        .head().getString(0).split('/').last
+      val before = day1Files()
+      assert(before.size == 2 && before.contains(k4File), s"day1 files: $before")
       t.merge(staged(Seq((1L, Some("a3"), 4L, 5))))
+      val after = day1Files()
+      assert(after.contains(k4File) && after.size == 2 && after != before,
+        s"tightening flush rewrote unmatched files: $before -> $after")
       val days3 = t.merge(staged(Seq((3L, None, 5L, 5))))
       assert(!days3.contains("2024-01-01"),
         s"day1 bloom should have been rebuilt exact (no stale k=3): $days3")
     } finally sys.props -= "graft.bloomRebuildEvery"
     assert(t.read().select($"k1", $"f1").as[(Long, String)].collect().toSet ==
-      Set((1L, "a3"), (2L, "b"), (9L, "z")))
+      Set((1L, "a3"), (2L, "b"), (4L, "d"), (9L, "z")))
   }
 
   test("appendBatch replay of a COMMITTED batch is a durable no-op") {
@@ -482,23 +494,40 @@ class WarehouseTableSpec extends AnyFunSuite {
   }
 
   test("broadcast merge plan and shuffle fallback produce identical state") {
-    def runMerge(maxRows: Long): Set[(Long, Option[String], String)] = {
+    def state(df: DataFrame): Set[(Long, Option[String], String)] =
+      df.select($"k1", $"f1", $"_pday".cast("string"))
+        .collect().map(r => (r.getLong(0),
+          if (r.isNullAt(1)) None else Some(r.getString(1)), r.getString(2))).toSet
+    val seed = Set((1L, Some("a"), "2024-01-01"), (2L, Some("b"), "2024-01-01"),
+      (3L, Some("c"), "2024-01-01"))
+    // the seed lands by append, or by a first merge into the freshly
+    // created table (CURRENT=0, no manifest to carry forward from)
+    def runMerge(maxRows: Long, seedByMerge: Boolean): Set[(Long, Option[String], String)] = {
       val root = tmpRoot()
       val t = mkTable(root)
-      t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k1", "f1")
+      if (seedByMerge) {
+        assert(t.currentVersion == 0L)
+        t.merge(staged(Seq((1L, Some("a"), 1L, 1), (2L, Some("b"), 1L, 1),
+          (3L, Some("c"), 1L, 1))), broadcastMaxRows = maxRows)
+        assert(t.currentVersion == 1L && state(t.readAsOf(1L)) == seed)
+      } else t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k1", "f1")
         .withColumn("partitionTime", ts(1)))
       // update k1, delete k2, insert k4; k5 tombstone-for-absent-key
       t.merge(staged(Seq(
         (1L, Some("a2"), 1L, 5), (2L, None, 2L, 5),
         (4L, Some("d"), 3L, 6), (5L, None, 4L, 6))), delete = true,
         broadcastMaxRows = maxRows)
-      t.read().select($"k1", $"f1", $"_pday".cast("string"))
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getString(1)), r.getString(2))).toSet
+      assert(state(t.readAsOf(t.currentVersion - 1)) == seed,
+        "pre-merge snapshot no longer reads the seed")
+      state(t.read())
     }
-    val broadcastState = runMerge(maxRows = Long.MaxValue)
-    val shuffleState = runMerge(maxRows = 0L) // forces the full-outer plan
+    val broadcastState = runMerge(maxRows = Long.MaxValue, seedByMerge = false)
+    val shuffleState = runMerge(maxRows = 0L, seedByMerge = false) // full-outer plan
     assert(broadcastState == shuffleState, "merge plans diverged")
+    assert(runMerge(Long.MaxValue, seedByMerge = true) == broadcastState,
+      "first merge into a fresh table diverged")
+    assert(runMerge(0L, seedByMerge = true) == broadcastState,
+      "first whole-day merge into a fresh table diverged")
     assert(broadcastState == Set(
       (1L, Some("a2"), "2024-01-01"), (3L, Some("c"), "2024-01-01"),
       (4L, Some("d"), "2024-01-06")))
@@ -531,6 +560,20 @@ class WarehouseTableSpec extends AnyFunSuite {
     t.merge(staged(Seq((1L, None, 1L, 3))))
     assert(t.read().select($"k1").as[Long].collect().toSeq == Seq(2L))
     assert(t.listDays() == Seq("2024-01-02"))
+  }
+
+  test("merge(delete = false): a tombstone's null-value insert joins its day's bloom") {
+    val root = tmpRoot()
+    val t = mkTable(root)
+    t.append(Seq((1L, "a")).toDF("k1", "f1").withColumn("partitionTime", ts(1)))
+    // with deletes off a tombstone for an absent key inserts a
+    // null-value row into its slice day (the full-outer plan's behavior)
+    t.merge(staged(Seq((7L, None, 1L, 3))), delete = false)
+    // a later update of that key from another day must find day 3
+    val days = t.merge(staged(Seq((7L, Some("x"), 2L, 5))), delete = false)
+    assert(days.contains("2024-01-03"), s"day 3 not probed: $days")
+    assert(t.read().select($"k1", $"f1", $"_pday").as[(Long, String, String)]
+      .collect().toSet == Set((1L, "a", "2024-01-01"), (7L, "x", "2024-01-03")))
   }
 
   test("merge: last-write-wins within batch (A1) before the join") {
@@ -1092,7 +1135,7 @@ class WarehouseTableSpec extends AnyFunSuite {
     assert(evolvedNames.nonEmpty, "random walk never evolved — vacuous")
     assert(expected.size > 10, "model recorded too few versions — vacuous")
     // EVERY recorded version reads exactly its model state, resolving
-    // per file across whatever mix of whole-day and _partial archives
+    // per file across whatever mix of whole-day and file-granular archives
     // the random sequence produced
     expected.toSeq.sortBy(_._1).foreach { case (v, want) =>
       val df = t.readAsOf(v)

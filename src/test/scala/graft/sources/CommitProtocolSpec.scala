@@ -296,7 +296,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     val liveNamesBefore = fs(root)
       .listStatus(path(s"$root/data/_pday=$day")).map(_.getPath.getName).toSet
     // stage the rewrite (k1=2 updated), claim, swap — then CRASH before
-    // finalizeCommit: the exact window the file-granular `_partial`
+    // finalizeCommit: the exact window the file-granular `_prelive`
     // journal exists for
     val staging = s"$root/.merge-crash1"
     Seq((2L, "upd")).toDF("k1", "f1").withColumn("_pday", lit(day))
@@ -339,6 +339,42 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(after == Map(1L -> "v1", 2L -> "upd", 3L -> "v3", 4L -> "v4"))
     assert(t.readAsOf(cur).select($"k1", $"f1").as[(Long, String)]
       .collect().toMap.apply(2L) == "v2", "pre-replay snapshot lost")
+  }
+
+  test("file-granular swap crash after its journal, before the first rename: " +
+      "recovery leaves the live day intact") {
+    val root = tmpRoot()
+    val t = mkTable(root)
+    (1 to 3).foreach(i => t.append(batch(Seq(i.toLong -> s"v$i"))))
+    val cur = t.currentVersion
+    val day = "2024-01-01"
+    val liveNamesBefore = fs(root)
+      .listStatus(path(s"$root/data/_pday=$day")).map(_.getPath.getName).toSet
+    // claim, journal, create the day's archive dir — then CRASH before
+    // any file moves: an archive day dir with nothing in it, which a
+    // whole-day rollback would read as "the day had no generation"
+    val v = t.claimCommit("update-where", Seq(day), cur + 1)
+    t.journalLiveFiles(Seq(day), v)
+    fs(root).mkdirs(path(s"$root/_graft/history/v$v/_pday=$day"))
+    // age the claim and collide with it: recovery runs
+    val claimPath = java.nio.file.Paths.get(
+      s"$root/_graft/snapshots/v$v.list")
+    val aged = new String(java.nio.file.Files.readAllBytes(claimPath), "UTF-8")
+      .replaceFirst("\\t\\d+\\t",
+        "\t" + (System.currentTimeMillis() - 20L * 60 * 1000) + "\t")
+    java.nio.file.Files.write(claimPath, aged.getBytes("UTF-8"))
+    intercept[java.util.ConcurrentModificationException] {
+      t.claimCommit("compact", Seq(day), v)
+    }
+    val liveNamesAfter = fs(root)
+      .listStatus(path(s"$root/data/_pday=$day")).map(_.getPath.getName).toSet
+    assert(liveNamesAfter == liveNamesBefore,
+      s"recovery changed the intact live day: $liveNamesAfter vs $liveNamesBefore")
+    assert(t.currentVersion == cur && !fs(root).exists(
+      path(s"$root/_graft/snapshots/v$v.list")) &&
+      !fs(root).exists(path(s"$root/_graft/history/v$v")))
+    assert(t.read().select($"k1", $"f1").as[(Long, String)].collect().toMap ==
+      Map(1L -> "v1", 2L -> "v2", 3L -> "v3"))
   }
 
   test("landing markers: a live writer's landed-but-uncommitted files are " +

@@ -14,18 +14,25 @@ dir="target/test-reports"
 
 suites=0 tests=0 failures=0 errors=0 skipped=0
 failing_suites=""
+timings=""   # one "<seconds> <suite>" line per suite
 for f in "$dir"/*.xml; do
   header=$(grep -o '<testsuite[^>]*>' "$f" | head -1)
-  attr() { echo "$header" | grep -o "$1=\"[0-9]*\"" | head -1 | grep -o '[0-9]*' || echo 0; }
+  attr() { echo "$header" | grep -o " $1=\"[0-9.]*\"" | head -1 | grep -o '[0-9.]*' || echo 0; }
   t=$(attr tests); fl=$(attr failures); er=$(attr errors); sk=$(attr skipped)
   suites=$((suites + 1)); tests=$((tests + t))
   failures=$((failures + fl)); errors=$((errors + er)); skipped=$((skipped + sk))
+  name=$(echo "$header" | sed -n 's/.* name="\([^"]*\)".*/\1/p')
+  timings="$timings$(attr time) ${name##*.}"$'\n'
   if [ "$((fl + er))" -gt 0 ]; then
-    name=$(echo "$header" | sed -n 's/.*name="\([^"]*\)".*/\1/p')
     failing_suites="$failing_suites\"$name\","
   fi
 done
 failing_suites="[${failing_suites%,}]"
+# suite wall time: the sum of every suite's `time` attribute, and the
+# three slowest suites — a run's duration is part of its record
+time_s=$(printf '%s' "$timings" | awk '{s += $1} END {printf "%.1f", s}')
+slowest=$(printf '%s' "$timings" | sort -rn | head -3 |
+  awk '{printf "%s{\"suite\":\"%s\",\"time_s\":%.1f}", (NR > 1 ? "," : ""), $2, $1}')
 
 newest=$(ls -t "$dir"/*.xml | head -1)
 oldest=$(ls -tr "$dir"/*.xml | head -1)
@@ -34,7 +41,7 @@ run_end=$(date -u -r "$newest" +%Y-%m-%dT%H:%M:%SZ)
 sha=$(git rev-parse HEAD 2>/dev/null || echo unknown)
 dirty=$(git status --porcelain 2>/dev/null | grep -cv '^$' || true)
 
-line=$(printf '{"suites":%d,"tests":%d,"failures":%d,"errors":%d,"skipped":%d,"failing_suites":%s,"report_oldest_utc":"%s","report_newest_utc":"%s","git_sha":"%s","uncommitted_files_at_report":%d,"written_utc":"%s"}' \
-  "$suites" "$tests" "$failures" "$errors" "$skipped" "$failing_suites" \
+line=$(printf '{"suites":%d,"tests":%d,"failures":%d,"errors":%d,"skipped":%d,"failing_suites":%s,"time_s":%s,"slowest_suites":[%s],"report_oldest_utc":"%s","report_newest_utc":"%s","git_sha":"%s","uncommitted_files_at_report":%d,"written_utc":"%s"}' \
+  "$suites" "$tests" "$failures" "$errors" "$skipped" "$failing_suites" "$time_s" "$slowest" \
   "$run_start" "$run_end" "$sha" "$dirty" "$(date -u +%Y-%m-%dT%H:%M:%SZ)")
 echo "$line" | tee "$out"
