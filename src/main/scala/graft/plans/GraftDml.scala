@@ -173,17 +173,19 @@ final case class GraftUpdateCommand(gt: GraftTableV2,
 }
 
 /** Dynamic `INSERT OVERWRITE t SELECT ...` →
-  * [[graft.sources.WarehouseTable.overwriteDynamicRouted]]: the day
-  * slices present in the query's rows swap atomically; all others are
-  * untouched. The query arrives conformed to the table schema (value
-  * fields + `_pday`), so rows are already routed.
+  * [[graft.sources.WarehouseTable.overwriteRouted]] scoped to the staged
+  * days: the day slices present in the query's rows swap atomically in
+  * one commit; all others are untouched. The query arrives conformed
+  * to the table schema (value fields + `_pday`), so rows are already
+  * routed.
   */
 final case class GraftDynamicOverwriteCommand(gt: GraftTableV2,
     query: LogicalPlan) extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {
     require(gt.versionAsOf.isEmpty,
       "graft: cannot INSERT OVERWRITE a time-travel snapshot")
-    gt.table.overwriteDynamicRouted(Bridge.ofRows(session, query))
+    gt.table.overwriteRouted(Bridge.ofRows(session, query),
+      "written slices", staged => staged)
     Seq.empty
   }
 }

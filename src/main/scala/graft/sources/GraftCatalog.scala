@@ -804,15 +804,14 @@ private[graft] object GraftScanBuilder {
   }
 }
 
-/** INSERT INTO → commit-protocol append; INSERT OVERWRITE / TRUNCATE →
-  * the ONE-commit atomic [[WarehouseTable.overwriteRouted]]; `INSERT
-  * OVERWRITE ... PARTITION (_pday='d')` and `INSERT INTO ... REPLACE
-  * WHERE <day-slice predicate>` (equality, IN, ranges — the
-  * backfill-a-month shape) → the predicate-scoped
-  * [[WarehouseTable.overwriteWhereRouted]]: replace exactly the
-  * matching slices in one commit, leave every other day untouched. The
-  * query arrives conformed to the table schema (value fields +
-  * `_pday`), so rows are already routed.
+/** INSERT INTO → commit-protocol append; INSERT OVERWRITE / TRUNCATE /
+  * `INSERT OVERWRITE ... PARTITION (_pday='d')` / `INSERT INTO ...
+  * REPLACE WHERE <day-slice predicate>` (equality, IN, ranges — the
+  * backfill-a-month shape) → the ONE-commit atomic
+  * [[WarehouseTable.overwriteRouted]], scoped to every day or to the
+  * slices the predicate matches: replace exactly those in one commit,
+  * leave every other day untouched. The query arrives conformed to the
+  * table schema (value fields + `_pday`), so rows are already routed.
   */
 private[graft] class GraftWriteBuilder(table: WarehouseTable,
     info: LogicalWriteInfo) extends WriteBuilder with SupportsOverwrite {
@@ -845,8 +844,9 @@ private[graft] class GraftWriteBuilder(table: WarehouseTable,
           val routed = data // schema = value fields + _pday, pre-routed
           replaceWhere match {
             case Some(filters) =>
-              table.overwriteWhereRouted(routed, day => filters.forall(f =>
-                GraftScanBuilder.dayMatches(f, day).contains(true)))
+              table.overwriteRouted(routed, "REPLACE WHERE predicate",
+                _ => day => filters.forall(f =>
+                  GraftScanBuilder.dayMatches(f, day).contains(true)))
             case None =>
               if (replaceAll || overwrite) table.overwriteRouted(routed)
               else table.appendRouted(routed)

@@ -30,11 +30,10 @@ import java.util.UUID
   *                                     nothing committed yet)
   *   _graft/snapshots/v&lt;N&gt;.list        per-version day→file manifests
   *                                     (time travel: [[readAsOf]]/[[history]])
-  *   _graft/history/v&lt;N&gt;/_pday=…       partition generations (or single
-  *                                     files) replaced at version N
+  *   _graft/history/v&lt;N&gt;/_pday=…       the data files version N replaced
   *                                     (reclaimed by [[vacuum]])
-  *   _graft/history/v&lt;N&gt;/_prelive      pre-swap live files of a
-  *                                     file-granular swap (crash journal)
+  *   _graft/history/v&lt;N&gt;/_prelive      files live in version N's swapped
+  *                                     days before its swap (crash journal)
   *   _graft/bloom2/YYYY-MM-DD.bloom    per-partition key bloom filter
   *                                     (GFB3 magic + commit-version stamp)
   *   _graft/zonemaps/&lt;col&gt;/&lt;day&gt;.props per-day column min/max sidecars
@@ -68,8 +67,9 @@ import java.util.UUID
   *     the cluster — driver memory independent of table history.
   *
   * Every rewrite writes its new files to a private staging dir, then
-  * swaps them in file by file (whole days for bulk rewrites) under a
-  * multi-writer commit protocol — the analog of BigQuery's transactional
+  * swaps them in file by file ([[swapFilesGranular]], the one way files
+  * leave `data/`) under a multi-writer commit protocol — the analog of
+  * BigQuery's transactional
   * MERGE: the writer atomically claims the next snapshot version
   * ([[claimCommit]]), aborts retryably when a concurrent commit touched
   * its days, and publishes the version's manifest after the swap
@@ -311,17 +311,19 @@ final class WarehouseTable private (
     */
   private def readWithTableSchema(days: Seq[String],
       projected: Option[StructType] = None): DataFrame = {
-    val df = spark.read
+    // a concurrent swap that empties a listed day removes its dir, so
+    // one vanishing between the caller's existence check and this
+    // listing surfaces as the typed retryable stale-read abort
+    val df = guardStaleRead(spark.read
       .schema(projected.getOrElse(schema))
       .option("basePath", dataPath)
-      .parquet(days.map(d => s"$dataPath/$partitionCol=$d"): _*)
+      .parquet(days.map(d => s"$dataPath/$partitionCol=$d"): _*))
     // the partition column comes from directory inference, which finds
     // NOTHING when a concurrent swap archived every file of the listed
-    // days between the caller's existence check and this listing — the
-    // df then silently lacks `partitionCol` and downstream references
-    // explode as UNRESOLVED_COLUMN. Surface it as the protocol's typed
-    // retryable stale-read abort instead (nothing committed; a re-run
-    // reads the new generation).
+    // days but had not yet removed their dirs — the df then silently
+    // lacks `partitionCol` and downstream references explode as
+    // UNRESOLVED_COLUMN. Surface it as the same abort (nothing
+    // committed; a re-run reads the new generation).
     if (!df.columns.contains(partitionCol))
       throw new java.util.ConcurrentModificationException(
         s"partitions ${days.mkString(",")} were emptied by a concurrent " +
@@ -1057,44 +1059,37 @@ final class WarehouseTable private (
       // keys — the writeExactBlooms argument); a union flush commits
       // only the days whose files change
       val touched = if (exact) days else affected
-      // the files of day `d` in manifest `m` this flush carries forward
-      def carried(m: Map[String, Seq[String]], d: String): Seq[String] =
-        if (!fileGranular) Seq.empty
-        else m.getOrElse(d, Seq.empty).filterNot(matchedFiles.getOrElse(d, Seq.empty).toSet)
       val atBase =
         if (!exact || !fileGranular) Map.empty[String, Seq[String]]
         else try readManifest(readBase)
         catch { case _: java.io.IOException => Map.empty[String, Seq[String]] }
+      // the files of day `d` at readBase this flush carries forward
+      def carried(d: String): Seq[String] = atBase.getOrElse(d, Seq.empty)
+        .filterNot(matchedFiles.getOrElse(d, Seq.empty).toSet)
       val blooms = if (!exact) None else Some(WarehouseTable.prof("merge.exactBlooms") {
-        exactBlooms(Seq(dataPath -> touched.map(d => d -> carried(atBase, d)).toMap,
+        exactBlooms(Seq(dataPath -> touched.map(d => d -> carried(d)).toMap,
           staging -> stagedFiles)) })
       val v = WarehouseTable.prof("merge.claim") {
         claimCommit(op, days, readBase + 1) }
-      // carry-forward base AFTER winning the claim, from the exact
-      // manifest finalize will rebase on: readBase's manifest may be
-      // vacuumed under a long stage window, while manifestBase(v) cannot
-      // be while this claim is held, and our days' entries in it equal
-      // the read-time ones (any overlapping commit aborted the claim walk)
-      val base = manifestBase(v)
-      WarehouseTable.prof("merge.swap") {
-        if (fileGranular) swapFilesGranular(staging,
-          affected.map(d => d -> matchedFiles.getOrElse(d, Seq.empty)).toMap, v)
-        else swapPartitions(staging, days, v) }
-      WarehouseTable.prof("merge.blooms") {
-        blooms match {
-          // the carried files differ from the claim-time base only when
-          // a concurrent vacuum removed readBase's manifest before it was
-          // read — then the blooms may miss carried keys: drop them
-          // (missing reads as always-candidate; the next exact flush heals)
-          case Some(bs) if touched.forall(d =>
-              carried(base, d).toSet == carried(atBase, d).toSet) =>
-            writeExactBlooms(touched, bs, v)
-          case Some(_) => dropBlooms(touched)
-          case None => unionBloomsAfterSwap(days, insertHashes, preExisting, v)
-        } }
-      WarehouseTable.prof("merge.finalize") {
-        finalizeCommit(op, touched, v, touched.map(d =>
-          d -> (carried(base, d) ++ stagedFiles.getOrElse(d, Seq.empty))).toMap)
+      // the file-granular plan replaces the matched files of the days
+      // whose files change; the whole-day plan replaces its days whole
+      val replaced = if (!fileGranular) None
+        else Some(affected.map(d => d -> matchedFiles.getOrElse(d, Seq.empty)).toMap)
+      WarehouseTable.prof("merge.publish") {
+        publish(op, v, touched, Some(staging), stagedFiles, replaced) { entries =>
+          blooms match {
+            // the new entries differ from the files the blooms were
+            // built from only when a concurrent vacuum removed readBase's
+            // manifest before it was read — then the blooms may miss
+            // carried keys: drop them (missing reads as always-candidate;
+            // the next exact flush heals)
+            case Some(bs) if touched.forall(d => entries(d).toSet ==
+                (carried(d) ++ stagedFiles.getOrElse(d, Seq.empty)).toSet) =>
+              writeExactBlooms(touched, bs, v)
+            case Some(_) => dropBlooms(touched)
+            case None => unionBloomsAfterSwap(days, insertHashes, preExisting, v)
+          }
+        }
         expireOldPartitions()
         autoVacuum()
       }
@@ -1384,9 +1379,8 @@ final class WarehouseTable private (
     // unsound here, and the staging IS the touched days' new generation
     val blooms = exactBlooms(Seq(staging -> stagedFiles))
     val v = claimCommit("merge-into", days, readBase + 1)
-    swapPartitions(staging, days, v)
-    writeExactBlooms(days, blooms, v)
-    finalizeCommit("merge-into", days, v, stagedFiles)
+    publish("merge-into", v, days, Some(staging), stagedFiles, None)(_ =>
+      writeExactBlooms(days, blooms, v))
     expireOldPartitions()
     autoVacuum()
     days
@@ -1487,8 +1481,8 @@ final class WarehouseTable private (
   /** EXACT per-day key blooms of a swap's new file sets, in ONE
     * aggregation over the key columns only. `groups` pairs a base dir
     * holding `_pday=<day>/` subdirs with day → file names under it: a
-    * whole-day swap passes its staged files; a file-granular flush adds
-    * the files it carries forward in `data/`. Two properties matter: the
+    * rewrite of whole days passes its staged files; a file-granular
+    * flush adds the files it carries forward in `data/`. Two properties matter: the
     * distributed scan runs BEFORE the caller claims its commit (a
     * rebuild inside the claim held it long enough to time out every
     * concurrent committer's claim wait), and it reads
@@ -1505,12 +1499,15 @@ final class WarehouseTable private (
     val keySet = keyFields.toSet
     val keySchema = StructType(schema.fields.filter(f => keySet.contains(f.name)))
       .add(StructField(partitionCol, StringType))
-    val reads = groups.flatMap { case (base, files) =>
+    // guarded at CONSTRUCTION too: DataSource resolution checks path
+    // existence eagerly, so a concurrent swap archiving a carried file
+    // must surface as the typed retryable CME (readCommitted's contract)
+    val reads = guardStaleRead(groups.flatMap { case (base, files) =>
       val paths = files.toSeq.flatMap { case (d, names) =>
         names.map(n => s"$base/$partitionCol=$d/$n") }
       if (paths.isEmpty) None
       else Some(spark.read.option("basePath", base).schema(keySchema).parquet(paths: _*))
-    }
+    })
     if (reads.isEmpty) Map.empty
     else guardStaleRead(reads.reduce(_ unionByName _)
       .groupBy(col(partitionCol).cast("string").as("d"))
@@ -1651,11 +1648,12 @@ final class WarehouseTable private (
     ()
   }
 
-  /** Install pre-computed exact day blooms after a swap: days swapped
-    * away (or absent from the staged bloom map) lose their bloom —
-    * missing blooms read as always-candidate, the conservative
-    * direction. Driver-side metadata writes only; safe to run while
-    * holding the commit claim. `stamp` is the claim's commit version.
+  /** Install pre-computed exact day blooms after a swap: days absent
+    * from the bloom map (swapped away, or holding no file the blooms
+    * were built from) lose their bloom — missing blooms read as
+    * always-candidate, the conservative direction. Driver-side metadata
+    * writes only; safe to run while holding the commit claim. `stamp`
+    * is the claim's commit version.
     */
   private def writeExactBlooms(days: Seq[String],
       blooms: Map[String, Array[Byte]], stamp: Long): Unit = {
@@ -1663,8 +1661,7 @@ final class WarehouseTable private (
     val wrote = withBloomLease(days) {
       days.foreach { d =>
         val bloomPath = new Path(s"$bloomDir/$d.bloom")
-        blooms.get(d).filter(_ =>
-            fs.exists(new Path(s"$dataPath/$partitionCol=$d"))) match {
+        blooms.get(d) match {
           case Some(bytes) =>
             writeBloomFile(bloomPath, stamp, _.write(bytes))
           case None =>
@@ -1715,10 +1712,11 @@ final class WarehouseTable private (
     * -th committed version's flush writes [[exactBlooms]] instead, as
     * does any [[compactPartitions]].
     *
-    * Per-day cases: day dir gone after the swap → bloom removed; fresh
-    * day → bloom = exactly the batch hashes routed there; pre-existing
-    * day with no batch hashes (pure bloom-candidate that only kept/lost
-    * rows) → old bloom untouched (already a superset); pre-existing +
+    * Per-day cases: day dir gone after the swap → skipped ([[publish]]
+    * already dropped its bloom); fresh day → bloom = exactly the batch
+    * hashes routed there; pre-existing day with no batch hashes (pure
+    * bloom-candidate that only kept/lost rows) → old bloom untouched
+    * (already a superset); pre-existing +
     * batch hashes → old ∪ batch. Any day whose existing bloom is
     * unreadable, of an unknown format, or size-incompatible loses it
     * (missing reads as always-candidate) until the next exact flush.
@@ -1737,10 +1735,9 @@ final class WarehouseTable private (
       writeBloomFile(p, stamp, b.writeTo(_))
     val rebuild = days.filter { d =>
       val bloomPath = new Path(s"$bloomDir/$d.bloom")
-      if (!fs.exists(new Path(s"$dataPath/$partitionCol=$d"))) {
-        if (fs.exists(bloomPath)) fs.delete(bloomPath, false)
-        false // day emptied by the merge: no bloom, nothing to rebuild
-      } else {
+      // a day emptied by the merge (or never created): no bloom to keep
+      if (!fs.exists(new Path(s"$dataPath/$partitionCol=$d"))) false
+      else {
         val hashes = insertHashes.getOrElse(d, Array.empty[Long])
         if (!preExisting.contains(d)) { writeBloom(bloomPath, batchBloom(hashes)); false }
         else WarehouseTable.readVersionedBloom(fs, bloomPath) match {
@@ -1960,7 +1957,7 @@ final class WarehouseTable private (
     *
     * Divergence safety rests on the table's write discipline: no path
     * ever mutates a data file in place — merge/compaction/restore
-    * write new files and swap directories, and vacuum deletes names —
+    * write new files and swap them in by name, and vacuum deletes names —
     * so a hardlinked byte range is immutable for as long as either
     * table references it, and POSIX keeps the inode alive until the
     * last name drops. Writes to the clone therefore never perturb the
@@ -2040,9 +2037,8 @@ final class WarehouseTable private (
     // concurrent swaps)
     val blooms = exactBlooms(Seq(staging -> stagedFiles))
     val v = claimCommit("compact", existing, readBase + 1)
-    swapPartitions(staging, existing, v)
-    writeExactBlooms(existing, blooms, v)
-    finalizeCommit("compact", existing, v, stagedFiles)
+    publish("compact", v, existing, Some(staging), stagedFiles, None)(_ =>
+      writeExactBlooms(existing, blooms, v))
     autoVacuum()
     existing
   }
@@ -2101,17 +2097,8 @@ final class WarehouseTable private (
       .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging))
     val stagedFiles = stagedDayFiles(staging)
     val v = claimCommit("compact-small", days, readBase + 1)
-    // carry-forward base after the claim (vacuum-race argument at the
-    // merge call site)
-    val base = manifestBase(v)
-    val newDayFiles = days.map { d =>
-      val gone = smallByDay(d).toSet
-      d -> (base.getOrElse(d, Seq.empty).filterNot(gone.contains) ++
-        stagedFiles.getOrElse(d, Seq.empty))
-    }.toMap
-    swapFilesGranular(staging, smallByDay, v)
-    restampBlooms(days, v, readBase)
-    finalizeCommit("compact-small", days, v, newDayFiles)
+    publish("compact-small", v, days, Some(staging), stagedFiles,
+      Some(smallByDay))(_ => restampBlooms(days, v, readBase))
     autoVacuum()
     days
   }
@@ -2197,34 +2184,13 @@ final class WarehouseTable private (
       .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging))
     val stagedFiles = stagedDayFiles(staging)
     val v = claimCommit(op, days, readBase + 1)
-    // carry-forward = the base generation minus the replaced files,
-    // read AFTER winning the claim from the exact manifest finalize
-    // rebases on: a pre-claim readManifest(readBase) would race
-    // a concurrent vacuum of that version — an empty map would silently
-    // drop every carried file from the new manifest. Our days' entries
-    // are read-time-stable regardless (overlapping commits abort the
-    // claim walk).
-    val base = manifestBase(v)
-    val carry: Map[String, Seq[String]] = days.map { d =>
-      val gone = replaced(d).toSet
-      d -> base.getOrElse(d, Seq.empty).filterNot(gone.contains)
-    }.toMap
-    swapFilesGranular(staging, replaced, v)
-    days.foreach { d =>
-      if (!fs.exists(new Path(s"$dataPath/$partitionCol=$d"))) {
-        val p = new Path(s"$bloomDir/$d.bloom")
-        if (fs.exists(p)) fs.delete(p, false)
-      }
-    }
     // a key-preserving rewrite (UPDATE) leaves the day blooms as tight
     // as it found them — re-stamp current blooms to this commit so the
     // health staleness column reads 0; a DELETE leaves them supersets
     // on purpose, and the un-bumped stamp is precisely what surfaces
     // that as heal-worthy
-    if (preservesKeys) restampBlooms(days, v, readBase)
-    val newDayFiles = days.map(d =>
-      d -> (carry(d) ++ stagedFiles.getOrElse(d, Seq.empty))).toMap
-    finalizeCommit(op, days, v, newDayFiles)
+    publish(op, v, days, Some(staging), stagedFiles, Some(replaced))(_ =>
+      if (preservesKeys) restampBlooms(days, v, readBase))
     expireOldPartitions()
     autoVacuum()
     days
@@ -2278,77 +2244,46 @@ final class WarehouseTable private (
   /** Drop partitions whose time slice ended more than
     * `partitionExpirationMs` before `asOfMs` (BigQuery's partition
     * expiration analog), along with their blooms. Runs as part of
-    * append/merge bookkeeping; no-op unless a TTL is configured.
-    * Driver-side metadata work only — O(partitions) list + deletes, no
-    * data scan. Returns the dropped slices.
+    * append/merge bookkeeping; no-op unless a TTL is configured. A
+    * logical delete with nothing staged: the dropped days' files move
+    * to the version archive through the one swap (snapshot reads keep
+    * serving them until [[vacuum]]). Driver-side metadata work only —
+    * one rename per dropped file, no data scan. Returns the dropped
+    * slices.
     */
   def expirePartitions(asOfMs: Long): Seq[String] = options.partitionExpirationMs match {
     case None => Seq.empty
     case Some(ttl) =>
-      val readBase = currentVersion
       val cutoff = asOfMs - ttl
-      val dropped = listDays().filter(d => sliceEndMs(d).exists(_ < cutoff))
-      if (dropped.isEmpty) return Seq.empty
-      // logical delete: the expired generation is archived for snapshot
-      // reads ([[readAsOf]]) and physically removed by [[vacuum]]
-      val v = claimCommit("expire", dropped, readBase + 1)
-      val archDir = new Path(s"$historyDir/v$v")
-      dropped.foreach { d =>
-        fs.mkdirs(archDir)
-        fs.rename(new Path(s"$dataPath/$partitionCol=$d"),
-          new Path(archDir, s"$partitionCol=$d"))
-        dropBlooms(Seq(d))
-      }
-      finalizeCommit("expire", dropped, v, Map.empty) // all dropped
-      dropped
+      dropDays("expire", currentVersion,
+        listDays().filter(d => sliceEndMs(d).exists(_ < cutoff)))
   }
 
   /** Drop EVERY partition as one committed version (BigQuery
-    * `TRUNCATE TABLE` analog; the write path's `SaveMode.Overwrite`
-    * runs it before appending the new rows). Same metadata-only shape
-    * as [[expirePartitions]]: the whole current generation is archived
-    * under the claim (snapshot reads keep working — a truncate is
-    * time-travelable and restorable), blooms drop, the manifest
-    * empties. O(partitions) driver renames, no data scan. Returns the
-    * dropped slices.
+    * `TRUNCATE TABLE` analog). Same shape as [[expirePartitions]]: the
+    * whole current generation moves to the version archive under the
+    * claim (a truncate is time-travelable and restorable), blooms drop,
+    * the manifest empties. One rename per live file, no data scan.
+    * Returns the dropped slices.
     */
-  def truncate(): Seq[String] = {
-    val readBase = currentVersion
-    val dropped = listDays()
-    if (dropped.isEmpty) return Seq.empty
-    val v = claimCommit("truncate", dropped, readBase + 1)
-    val archDir = new Path(s"$historyDir/v$v")
-    dropped.foreach { d =>
-      fs.mkdirs(archDir)
-      fs.rename(new Path(s"$dataPath/$partitionCol=$d"),
-        new Path(archDir, s"$partitionCol=$d"))
-      dropBlooms(Seq(d))
-    }
-    finalizeCommit("truncate", dropped, v, Map.empty)
-    dropped
+  def truncate(): Seq[String] = dropDays("truncate", currentVersion, listDays())
+
+  /** Commit `days` emptied: claim them (`readBase`: CURRENT before the
+    * day listing), swap every live file out with nothing staged in.
+    */
+  private def dropDays(op: String, readBase: Long,
+      days: Seq[String]): Seq[String] = {
+    if (days.isEmpty) return Seq.empty
+    val v = claimCommit(op, days, readBase + 1)
+    publish(op, v, days, None, Map.empty, None)(_ => ())
+    days
   }
 
   /** Atomic REPLACE of the whole table content with `df` in ONE
     * committed version — the semantics a BI tool expects from
     * `mode("overwrite")` (Delta's equivalent is likewise a single
-    * commit). The previous truncate-then-append shape left two windows
-    * (advisor-found): a concurrent reader resolving between the
-    * commits saw a committed EMPTY table, and a crash between them
-    * durably truncated without the new data ever landing. Here the new
-    * generation is fully staged before the claim, every pre-existing
-    * day plus every incoming day swaps under one claim (days absent
-    * from staging are archived away), blooms are exact from staging,
-    * and one manifest finalize publishes the replacement — a reader
-    * sees the old table or the new one, never the gap. The replaced
-    * generation stays time-travelable and restorable.
-    *
-    * Touched-day race: a day committed by a concurrent writer between
-    * this op's day listing and its claim would evade the swap (the
-    * overwrite would not actually replace everything) — so after
-    * winning the claim the manifest base is re-checked, and any day
-    * outside the claimed set releases the claim and re-resolves
-    * (bounded retries, then the standard concurrent-conflict abort).
-    * Returns the final day set of the new generation.
+    * commit): [[overwriteRouted]] over every day. Returns the day set
+    * of the new generation.
     */
   def overwrite(df: DataFrame, partitionTimeCol: String = "partitionTime"): Seq[String] =
     overwriteRouted(df
@@ -2356,43 +2291,85 @@ final class WarehouseTable private (
       .drop(partitionTimeCol))
 
   /** Day-scoped [[overwrite]]: atomically replace exactly `days`,
-    * routing rows by their `partitionTime` (the DataFrame-API twin of
-    * SQL `INSERT OVERWRITE ... PARTITION (_pday=...)`; see
-    * [[overwriteDaysRouted]] for the contract).
+    * routing rows by their `partitionTime` — the classic warehouse
+    * backfill, DataFrame-API twin of SQL `INSERT OVERWRITE ... PARTITION
+    * (_pday=...)` (Delta's `replaceWhere`). A target day with no staged
+    * rows is emptied; rows routed outside `days` fail the op
+    * ([[overwriteRouted]]). Returns the target days.
     */
   def overwriteDays(df: DataFrame, days: Seq[String],
-      partitionTimeCol: String = "partitionTime"): Seq[String] =
-    overwriteDaysRouted(df
+      partitionTimeCol: String = "partitionTime"): Seq[String] = {
+    val targets = days.distinct.sorted
+    require(targets.nonEmpty, "overwriteDays: no target day slices")
+    overwriteRouted(df
       .withColumn(partitionCol, routeExpr(partitionTimeCol))
-      .drop(partitionTimeCol), days)
+      .drop(partitionTimeCol),
+      s"overwritten slices ${targets.mkString(",")}", _ => targets.toSet)
+    targets
+  }
 
-  /** [[overwrite]] for a frame already carrying the partition column
-    * (the SQL `INSERT OVERWRITE` path, whose rows arrive pre-routed).
+  /** The one overwrite: atomically replace every day slice in scope
+    * with the rows of `routed` (a frame already carrying the partition
+    * column) in ONE committed version. `inScope(stagedDays)` names the
+    * replaced slices; the four forms differ only there:
+    *
+    *  - full ([[overwrite]], SQL `INSERT OVERWRITE`): every day;
+    *  - [[overwriteDays]]: the target set;
+    *  - `INSERT INTO t REPLACE WHERE <day predicate>` (also `INSERT
+    *    OVERWRITE ... PARTITION (_pday=...)`): the matching days —
+    *    ranges work, the backfill-a-month shape;
+    *  - dynamic (`spark.sql.sources.partitionOverwriteMode=dynamic`,
+    *    the V2 `SupportsDynamicOverwrite` contract): the staged days.
+    *
+    * The new generation is fully staged before the claim. Staged rows
+    * routing outside the scope fail the op before any claim (`scope`
+    * names it in the error): silently dropping them or widening the
+    * replacement would rewrite slices the caller did not name. Blooms
+    * are exact from staging; a reader sees the old generation or the
+    * new one, never a gap, and the replaced one stays time-travelable
+    * and restorable.
+    *
+    * Touched-day race: an in-scope day committed by a concurrent writer
+    * between the day listing and the claim would evade the swap — so
+    * after winning the claim the manifest base is re-checked, and any
+    * in-scope day outside the claimed set releases the claim and
+    * re-resolves (bounded retries, then the standard concurrent-conflict
+    * abort). Returns the day set of the new generation.
     */
-  private[sources] def overwriteRouted(routed: DataFrame): Seq[String] = {
+  private[graft] def overwriteRouted(routed: DataFrame,
+      scope: String = "whole table",
+      inScope: Set[String] => String => Boolean = _ => _ => true): Seq[String] = {
     val staging = s"$root/.overwrite-${UUID.randomUUID().toString.take(8)}"
     guardStaleRead(clusteredWrite(routed).write
       .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging))
     val stagedFiles = stagedDayFiles(staging)
+    val replaces = inScope(stagedFiles.keySet)
+    val stray = stagedFiles.keySet.filterNot(replaces)
+    if (stray.nonEmpty) {
+      fs.delete(new Path(staging), true)
+      throw new IllegalArgumentException(
+        s"overwrite of $root: staged rows route to " +
+          s"${stray.toSeq.sorted.mkString(",")}, outside the $scope — " +
+          "refuse rather than replace slices the statement did not name")
+    }
     // exact blooms from the private staging dir — the new generation IS
     // the staged content, so the probe filter is exact from version one
     val blooms = exactBlooms(Seq(staging -> stagedFiles))
     var attempt = 0
     while (true) {
       val readBase = currentVersion
-      val days = (listDays() ++ stagedFiles.keys).distinct.sorted
+      val days = (listDays().filter(replaces) ++ stagedFiles.keys).distinct.sorted
       if (days.isEmpty) { fs.delete(new Path(staging), true); return Seq.empty }
       val v = claimCommit("overwrite", days, readBase + 1)
       // the claim walk aborted any OVERLAPPING concurrent commit, but a
-      // commit creating a BRAND-NEW day between listDays() and the
-      // claim shares no day with ours — re-check against the exact
+      // commit creating a BRAND-NEW in-scope day between listDays() and
+      // the claim shares no day with ours — re-check against the exact
       // manifest finalize will rebase on, and re-resolve if one slipped
       // in (releasing the not-yet-acted-on claim frees the slot)
-      val extra = manifestBase(v).keySet -- days
+      val extra = manifestBase(v).keySet.filter(replaces) -- days
       if (extra.isEmpty) {
-        swapPartitions(staging, days, v)
-        writeExactBlooms(days, blooms, v)
-        finalizeCommit("overwrite", days, v, stagedFiles)
+        publish("overwrite", v, days, Some(staging), stagedFiles, None)(_ =>
+          writeExactBlooms(days, blooms, v))
         expireOldPartitions()
         autoVacuum()
         return stagedFiles.keys.toSeq.sorted
@@ -2402,134 +2379,11 @@ final class WarehouseTable private (
       if (attempt > 5) {
         fs.delete(new Path(staging), true)
         throw new java.util.ConcurrentModificationException(
-          s"overwrite of $root: new partitions kept appearing " +
+          s"overwrite of $root: new partitions in scope kept appearing " +
             s"(${extra.mkString(",")}) across $attempt claim attempts")
       }
     }
     Seq.empty // unreachable
-  }
-
-  /** Atomic REPLACE of specific day slices with `routed` in ONE
-    * committed version — the classic warehouse backfill (`INSERT
-    * OVERWRITE t PARTITION (_pday='2024-01-01') SELECT ...`, Delta's
-    * `replaceWhere`). Same one-commit discipline as [[overwriteRouted]]
-    * (fully staged before the claim, exact blooms, readers see the old
-    * generation or the new one, never a gap; the replaced generation
-    * stays time-travelable), but claims ONLY the target days, so
-    * concurrent commits on other days proceed untouched and the rest of
-    * the manifest carries forward. A target day with no staged rows is
-    * emptied. Rows routed OUTSIDE the target days fail the op before
-    * any claim — silently dropping them (Hive static-partition
-    * semantics) or widening the replacement scope (dynamic semantics)
-    * would both rewrite history the caller did not name.
-    */
-  private[sources] def overwriteDaysRouted(routed: DataFrame,
-      targetDays: Seq[String]): Seq[String] = {
-    val days = targetDays.distinct.sorted
-    require(days.nonEmpty, "overwriteDays: no target day slices")
-    val staging = s"$root/.overwrite-${UUID.randomUUID().toString.take(8)}"
-    guardStaleRead(clusteredWrite(routed).write
-      .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging))
-    val stagedFiles = stagedDayFiles(staging)
-    val stray = stagedFiles.keySet -- days.toSet
-    if (stray.nonEmpty) {
-      fs.delete(new Path(staging), true)
-      throw new IllegalArgumentException(
-        s"day-scoped overwrite of $root: staged rows route to " +
-          s"${stray.toSeq.sorted.mkString(",")}, outside the overwritten " +
-          s"slices ${days.mkString(",")} — refuse rather than replace " +
-          "partitions the statement did not name")
-    }
-    commitStagedSliceSwap(staging, stagedFiles, days)
-  }
-
-  /** Predicate-scoped overwrite (`INSERT INTO t REPLACE WHERE <day
-    * predicate>`): replace every day slice MATCHING `pred` — existing
-    * matching days are emptied-or-replaced, staged days must all match
-    * (rows routing outside the predicate fail the statement). Ranges
-    * work (`_pday >= 'a' AND _pday < 'b'` — the backfill-a-month shape
-    * Delta's replaceWhere serves); the day set is enumerated from the
-    * CURRENT day listing ∪ the staged days, and — because a concurrent
-    * commit can create a new matching day between the listing and the
-    * claim — re-checked against the exact manifest the finalize would
-    * rebase on, re-resolving on a slip (the [[overwriteRouted]] race
-    * loop, scoped to the predicate).
-    */
-  private[graft] def overwriteWhereRouted(routed: DataFrame,
-      pred: String => Boolean): Seq[String] = {
-    val staging = s"$root/.overwrite-${UUID.randomUUID().toString.take(8)}"
-    guardStaleRead(clusteredWrite(routed).write
-      .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging))
-    val stagedFiles = stagedDayFiles(staging)
-    val stray = stagedFiles.keySet.filterNot(pred)
-    if (stray.nonEmpty) {
-      fs.delete(new Path(staging), true)
-      throw new IllegalArgumentException(
-        s"predicate-scoped overwrite of $root: staged rows route to " +
-          s"${stray.toSeq.sorted.mkString(",")}, outside the REPLACE WHERE " +
-          "predicate — refuse rather than replace slices the statement " +
-          "did not name")
-    }
-    // blooms BEFORE the swap loop: swapPartitions deletes the staging dir
-    val blooms = exactBlooms(Seq(staging -> stagedFiles))
-    var attempt = 0
-    while (true) {
-      val readBase = currentVersion
-      val days = (listDays().filter(pred) ++ stagedFiles.keys).distinct.sorted
-      if (days.isEmpty) { fs.delete(new Path(staging), true); return Seq.empty }
-      val v = claimCommit("overwrite", days, readBase + 1)
-      val extra = manifestBase(v).keySet.filter(pred) -- days
-      if (extra.isEmpty) {
-        swapPartitions(staging, days, v)
-        writeExactBlooms(days, blooms, v)
-        finalizeCommit("overwrite", days, v, stagedFiles)
-        expireOldPartitions()
-        autoVacuum()
-        return days
-      }
-      fs.delete(new Path(s"$snapDir/v$v.list"), false)
-      attempt += 1
-      if (attempt > 5) {
-        fs.delete(new Path(staging), true)
-        throw new java.util.ConcurrentModificationException(
-          s"predicate overwrite of $root: new matching partitions kept " +
-            s"appearing (${extra.mkString(",")}) across $attempt claim attempts")
-      }
-    }
-    Seq.empty // unreachable
-  }
-
-  /** Dynamic-partition overwrite (`INSERT OVERWRITE` under
-    * `spark.sql.sources.partitionOverwriteMode=dynamic`, the V2
-    * `SupportsDynamicOverwrite` contract): replace exactly the day
-    * slices PRESENT in the written data, one commit, every other day
-    * untouched. The rows themselves name the replaced scope — the
-    * fourth corner of the overwrite matrix (full / static partition /
-    * predicate / dynamic). An empty frame replaces nothing.
-    */
-  private[graft] def overwriteDynamicRouted(routed: DataFrame): Seq[String] = {
-    val staging = s"$root/.overwrite-${UUID.randomUUID().toString.take(8)}"
-    guardStaleRead(clusteredWrite(routed).write
-      .mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staging))
-    val stagedFiles = stagedDayFiles(staging)
-    if (stagedFiles.isEmpty) { fs.delete(new Path(staging), true); return Seq.empty }
-    commitStagedSliceSwap(staging, stagedFiles, stagedFiles.keys.toSeq.sorted)
-  }
-
-  /** Shared tail of the slice-scoped overwrites: claim exactly `days`,
-    * swap in the staged generation, exact blooms, ONE finalize.
-    */
-  private def commitStagedSliceSwap(staging: String,
-      stagedFiles: Map[String, Seq[String]], days: Seq[String]): Seq[String] = {
-    val blooms = exactBlooms(Seq(staging -> stagedFiles))
-    val readBase = currentVersion
-    val v = claimCommit("overwrite", days, readBase + 1)
-    swapPartitions(staging, days, v)
-    writeExactBlooms(days, blooms, v)
-    finalizeCommit("overwrite", days, v, stagedFiles)
-    expireOldPartitions()
-    autoVacuum()
-    days
   }
 
   private def expireOldPartitions(): Unit =
@@ -2556,64 +2410,76 @@ final class WarehouseTable private (
     } catch { case _: java.time.format.DateTimeParseException => None }
   }
 
-  // ---- partition swap (atomic-per-partition rewrite) ----
+  // ---- the swap (the one way files leave `data/`) ----
 
-  /** Replace the given day partitions of `data/` with the contents of a
-    * staging write: rename-in per partition, archive old, delete staging.
-    * Partitions in `days` absent from staging (every row deleted) are
-    * removed from `data/`. Replaced generations are renamed (not
-    * deleted) into `_graft/history/v<archiveVersion>/` so snapshot reads
-    * ([[readAsOf]]) stay serviceable until [[vacuum]].
+  /** The publish step of every rewriting op, run after the caller's
+    * [[claimCommit]] of version `v` over `touched`: swap, blooms,
+    * manifest. Each touched day's new entry is the base manifest's
+    * entry minus the replaced files plus the staged ones:
     *
-    * Multi-writer note (soak-spec pinned): the swap MOVES the old
-    * generation into the version archive, so a live-path reader whose
-    * plan listed files before the swap fails transiently with
+    *  - `replaced = Some(day → files)`: those files leave their day;
+    *    days absent from the map keep every file;
+    *  - `replaced = None`: every touched day is replaced whole — every
+    *    file live in it at swap time leaves, so its entry is exactly
+    *    the staged files.
+    *
+    * `staging` holds the staged generation (`stagedFiles`); None stages
+    * nothing (expire/truncate). The base is read AFTER winning the
+    * claim, from the exact manifest finalize rebases on: the op's
+    * pre-claim read base may be vacuumed under a long stage window,
+    * while manifestBase(v) cannot be while the claim is held, and the
+    * touched days' entries in it equal the read-time ones (any
+    * overlapping commit aborted the claim walk). A day the swap emptied
+    * loses its bloom (missing reads as always-candidate); `blooms` then
+    * maintains the rest, given each touched day's new entry.
+    */
+  private def publish(op: String, v: Long, touched: Seq[String],
+      staging: Option[String], stagedFiles: Map[String, Seq[String]],
+      replaced: Option[Map[String, Seq[String]]])(
+      blooms: Map[String, Seq[String]] => Unit): Unit = {
+    val base = manifestBase(v)
+    val entries = touched.map { d =>
+      val staged = stagedFiles.getOrElse(d, Seq.empty)
+      d -> replaced.fold(staged) { r =>
+        val gone = r.getOrElse(d, Seq.empty).toSet
+        base.getOrElse(d, Seq.empty).filterNot(gone.contains) ++ staged
+      }
+    }.toMap
+    swapFilesGranular(staging, replaced.getOrElse(touched.map(d =>
+      d -> listDayFiles(new Path(s"$dataPath/$partitionCol=$d"))).toMap), v)
+    dropBlooms(touched.filter(entries(_).isEmpty))
+    blooms(entries)
+    finalizeCommit(op, touched, v, entries)
+  }
+
+  /** Swap one rewrite into `data/` file by file: inside each day of
+    * `replaced`, ONLY the named files are renamed into the version
+    * archive `_graft/history/v<archiveVersion>/` and the day's staged
+    * files (under `staging`) renamed in; every other live file is
+    * carried forward untouched — Delta-class write amplification (an
+    * UPDATE matching one file of a 400-file day moves one file, not
+    * 400). An empty list is a pure-addition day (a merge inserting into
+    * — or creating — a day with no matched files); a day left with no
+    * file is removed. Archived files stay serviceable to snapshot reads
+    * ([[readAsOf]] resolves per file) until [[vacuum]].
+    *
+    * Before any archive day dir exists, [[journalLiveFiles]] records
+    * every swapped day's pre-swap live files in ONE version-level
+    * journal, from which [[recoverCrashedClaim]] rolls a crashed swap
+    * back file by file. Underscore-prefixed names are invisible to
+    * every file listing ([[listDayFiles]]) and to [[readAsOf]]'s
+    * archive resolution.
+    *
+    * Multi-writer note (soak-spec pinned): the swap MOVES replaced
+    * files into the version archive, so a live-path reader whose plan
+    * listed files before the swap fails transiently with
     * `FAILED_READ.FILE_NOT_EXIST`. No data is lost — the files are in
     * the archive (`readAsOf` serves them) and the new generation is
     * complete before CURRENT advances — but concurrent writers must
     * treat that failure as a retryable abort, exactly like a lost
     * claim: re-plan and the retry reads the new generation.
     */
-  private[sources] def swapPartitions(staging: String, days: Seq[String],
-      archiveVersion: Long): Unit = {
-    fs.mkdirs(new Path(dataPath))
-    val archDir = new Path(s"$historyDir/v$archiveVersion")
-    days.foreach { d =>
-      val oldP = new Path(s"$dataPath/$partitionCol=$d")
-      val newP = new Path(s"$staging/$partitionCol=$d")
-      fs.mkdirs(archDir)
-      // archive the old generation — or an empty MARKER dir when the day
-      // had none. The marker is the crash-recovery journal: a day present
-      // under the archive dir was processed by this swap, so a recovery
-      // of an abandoned claim ([[recoverCrashedClaim]]) knows exactly
-      // which live days are torn new-generation content to roll back.
-      // readAsOf is unaffected: it only consults archives *newer* than
-      // the version it reads, and no manifest lists files for a day that
-      // first appeared at this version (see firstArchiveOf).
-      if (fs.exists(oldP)) fs.rename(oldP, new Path(archDir, s"$partitionCol=$d"))
-      else fs.mkdirs(new Path(archDir, s"$partitionCol=$d"))
-      if (fs.exists(newP)) fs.rename(newP, oldP)
-    }
-    fs.delete(new Path(staging), true)
-  }
-
-  /** File-granular sibling of [[swapPartitions]] for the merge flush,
-    * the predicate DML rewrites and small-file compaction: inside each
-    * touched day, ONLY the `replaced` files are renamed into the version
-    * archive and the staged rewrite renamed in; every other live file is
-    * carried forward untouched — Delta-class write amplification (an
-    * UPDATE matching one file of a 400-file day moves one file, not 400).
-    * An empty `replaced` list is a pure-addition day (a merge inserting
-    * into — or creating — a day with no matched files).
-    *
-    * Before any archive day dir exists, [[journalLiveFiles]] records
-    * every touched day's pre-swap live files in ONE version-level
-    * journal: its presence tells [[recoverCrashedClaim]] to roll the
-    * version's days back file by file instead of restoring whole-day
-    * generations. Underscore-prefixed names are invisible to every file
-    * listing ([[listDayFiles]]) and to [[readAsOf]]'s archive resolution.
-    */
-  private[sources] def swapFilesGranular(staging: String,
+  private[sources] def swapFilesGranular(staging: Option[String],
       replaced: Map[String, Seq[String]], archiveVersion: Long): Unit = {
     journalLiveFiles(replaced.keys.toSeq, archiveVersion)
     fs.mkdirs(new Path(dataPath))
@@ -2624,19 +2490,19 @@ final class WarehouseTable private (
       fs.mkdirs(archDayDir)
       names.foreach(n =>
         fs.rename(new Path(liveDir, n), new Path(archDayDir, n)))
-      val stagedDay = new Path(s"$staging/$partitionCol=$d")
-      if (fs.exists(stagedDay)) {
-        fs.mkdirs(liveDir) // fresh day: created by this swap
-        listDayFiles(stagedDay).foreach(n =>
-          fs.rename(new Path(stagedDay, n), new Path(liveDir, n)))
-      }
+      staging.map(s => new Path(s"$s/$partitionCol=$d")).filter(fs.exists)
+        .foreach { stagedDay =>
+          fs.mkdirs(liveDir) // fresh day: created by this swap
+          listDayFiles(stagedDay).foreach(n =>
+            fs.rename(new Path(stagedDay, n), new Path(liveDir, n)))
+        }
       // every file replaced, nothing rewritten back, nothing carried:
       // the day is gone — drop the empty dir so listDays()/bloom
       // bookkeeping see it as such
       if (fs.exists(liveDir) && fs.listStatus(liveDir).isEmpty)
         fs.delete(liveDir, true)
     }
-    fs.delete(new Path(staging), true)
+    staging.foreach(s => fs.delete(new Path(s), true))
   }
 
   /** The journal step of [[swapFilesGranular]]: write
@@ -2934,22 +2800,18 @@ final class WarehouseTable private (
     * metadata write moments after the claim; minutes of `pending:` can
     * only mean a dead writer).
     *
-    * [[swapPartitions]] journals its progress in the claim's archive
-    * dir (real old generations, or empty marker dirs for days that had
-    * none), so recovery is exact:
-    *
-    *  - day present under `history/v<claim>/`: the swap processed it —
-    *    whatever is live is the torn NEW generation; drop it and move
-    *    the archived generation (nothing, for a marker) back;
-    *  - day absent: the swap never reached it; the live generation is
-    *    the intact pre-claim one.
-    *
-    * A version whose archive dir holds the [[swapFilesGranular]] journal
-    * ([[WarehouseTable.LiveSwapJournal]]) swapped file by file: each
-    * processed day rolls back by deleting the live files the journal
-    * does not list (the torn new generation — plus any concurrent
-    * append's uncommitted files, which abort on the rolled-back overlap
-    * exactly like the whole-day path) and moving its archived files back.
+    * [[swapFilesGranular]] writes its journal
+    * ([[WarehouseTable.LiveSwapJournal]]: each swapped day's pre-swap
+    * live files) before it creates any archive day dir, so recovery is
+    * exact. Each day present under `history/v<claim>/` was reached by
+    * the swap and rolls back file by file: the live files the journal
+    * does not list are deleted (the torn new generation — plus any
+    * concurrent append's uncommitted files, which abort on the
+    * rolled-back overlap) and the archived files move back. A day
+    * absent from the archive was never reached; its live files are the
+    * intact pre-claim ones. An archive holding day dirs but no journal
+    * is not something this table writes: recovery refuses it with an
+    * [[IllegalStateException]] naming the version.
     *
     * Blooms of rolled-back days are dropped (the crashed writer may have
     * written them against the new generation; missing reads as
@@ -2969,40 +2831,37 @@ final class WarehouseTable private (
       else fs.listStatus(archDir).toSeq.map(_.getPath.getName)
         .filter(_.startsWith(s"$partitionCol="))
         .map(_.stripPrefix(s"$partitionCol="))
-    // day → files live before a file-granular swap; None: whole-day swap
     val journal = new Path(archDir, WarehouseTable.LiveSwapJournal)
-    val preLive: Option[Map[String, Set[String]]] =
-      if (!fs.exists(journal)) None
-      else Some(readMetaString(spark, journal.toString).linesIterator
+    if (processed.nonEmpty && !fs.exists(journal))
+      throw new IllegalStateException(
+        s"crashed claim v$v of $root: archive $archDir holds day dirs " +
+          s"but no ${WarehouseTable.LiveSwapJournal} journal — not a swap " +
+          "this table writes; refusing to roll it back")
+    // day → files live before the swap
+    val preLive: Map[String, Set[String]] =
+      if (processed.isEmpty) Map.empty
+      else readMetaString(spark, journal.toString).linesIterator
         .map(_.split("\t", 2)).collect { case Array(d, n) => d -> n }
-        .toSeq.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).toSet })
+        .toSeq.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).toSet }
     processed.foreach { d =>
       val live = new Path(s"$dataPath/$partitionCol=$d")
       val arch = new Path(archDir, s"$partitionCol=$d")
-      preLive match {
-        case Some(j) =>
-          val known = j.getOrElse(d, Set.empty[String])
-          if (fs.exists(live))
-            fs.listStatus(live).toSeq.filter { st =>
-              val n = st.getPath.getName
-              st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-                !known.contains(n)
-            }.foreach(st => fs.delete(st.getPath, false))
-          else fs.mkdirs(live)
-          listDayFiles(arch).foreach { n =>
-            fs.rename(new Path(arch, n), new Path(live, n)); ()
-          }
-          // a day the crashed swap CREATED (no archived files): rolling
-          // back leaves an empty dir — drop it so the day reads as never
-          // having existed
-          if (fs.exists(live) && fs.listStatus(live).isEmpty)
-            fs.delete(live, true)
-        case None =>
-          if (fs.exists(live)) fs.delete(live, true)
-          // a marker (empty) archive dir means the day had no pre-claim
-          // generation — rolling back means the day simply disappears
-          if (listDayFiles(arch).nonEmpty) fs.rename(arch, live)
+      val known = preLive.getOrElse(d, Set.empty[String])
+      if (fs.exists(live))
+        fs.listStatus(live).toSeq.filter { st =>
+          val n = st.getPath.getName
+          st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
+            !known.contains(n)
+        }.foreach(st => fs.delete(st.getPath, false))
+      else fs.mkdirs(live)
+      listDayFiles(arch).foreach { n =>
+        fs.rename(new Path(arch, n), new Path(live, n)); ()
       }
+      // a day the crashed swap CREATED (no archived files): rolling
+      // back leaves an empty dir — drop it so the day reads as never
+      // having existed
+      if (fs.exists(live) && fs.listStatus(live).isEmpty)
+        fs.delete(live, true)
     }
     if (fs.exists(archDir)) fs.delete(archDir, true)
     // DROP rolled-back days' blooms rather than rebuilding from live
@@ -3015,13 +2874,13 @@ final class WarehouseTable private (
     ()
   }
 
-  /** Finalize a [[claimCommit]]ed version after its data swap: rewrite
-    * the claimed file with the real manifest, then advance CURRENT.
-    * The base is the newest finalized manifest below `v` — COMPLETE,
-    * because commits never sequence past an unfinalized claim
-    * ([[awaitClaimResolution]]); this op's touched days take EXACTLY
-    * the staged generation's file names (`stagedFiles`; a touched day
-    * absent from it was swapped OUT and drops from the manifest).
+  /** Finalize a [[claimCommit]]ed version after its data swap (the
+    * last step of [[publish]]): rewrite the claimed file with the real
+    * manifest, then advance CURRENT. The base is the newest finalized
+    * manifest below `v` — COMPLETE, because commits never sequence past
+    * an unfinalized claim ([[awaitClaimResolution]]); this op's touched
+    * days take EXACTLY their new `entries` (a touched day with no entry
+    * files was emptied and drops from the manifest).
     * File-exact, never directory-listed (soak-found fix): a listing
     * taken here would sweep a concurrent append's
     * landed-but-uncommitted files into this manifest — files that
@@ -3033,10 +2892,10 @@ final class WarehouseTable private (
     * its historical position (CURRENT never regresses).
     */
   private def finalizeCommit(op: String, touched: Seq[String],
-      v: Long, stagedFiles: Map[String, Seq[String]]): Unit = {
+      v: Long, entries: Map[String, Seq[String]]): Unit = {
     val prev = manifestBase(v)
     val updated = touched.foldLeft(prev) { (m, d) =>
-      stagedFiles.get(d).filter(_.nonEmpty) match {
+      entries.get(d).filter(_.nonEmpty) match {
         case Some(files) => m.updated(d, files)
         case None => m - d
       }
@@ -3046,8 +2905,8 @@ final class WarehouseTable private (
     advanceCurrent(v)
   }
 
-  /** The staged generation's day → file names (the exact manifest
-    * entries [[finalizeCommit]] records for a swap's touched days).
+  /** The staged generation's day → file names (the files a swap moves
+    * into each touched day; [[publish]] adds them to its new entries).
     * The staging dir is private to this writer, so the listing is
     * race-free.
     */
@@ -3373,10 +3232,9 @@ final class WarehouseTable private (
     *
     * Resolution is per FILE, driver-side metadata only: an as-of file
     * lives in exactly one place — the archive of the swap that replaced
-    * it (whole-day swaps archive a generation wholesale; file-granular
-    * DML archives just the replaced files), or the live partition if it
-    * was never replaced (post-`version` appends only ADD files, which
-    * the manifest's file list excludes). Candidate locations per day
+    * it (every swap archives exactly the files it replaced), or the
+    * live partition if it was never replaced (post-`version` appends
+    * only ADD files, which the manifest's file list excludes). Candidate locations per day
     * are its post-`version` archives oldest-first then the live dir,
     * consulted only until every manifest file is bound. Each location
     * group becomes one parquet read (partition column inferred from the
@@ -3403,13 +3261,11 @@ final class WarehouseTable private (
     // ONE directory listing per archive generation (not one existence
     // probe per day × archive — O(days × versions) round trips on an
     // object store): day → post-`version` archives holding it, oldest
-    // first. Resolution is then per FILE: a whole-day swap puts every
-    // as-of file in the day's first archive (one listing, as before),
-    // but a FILE-granular DML rewrite ([[swapFilesGranular]]) archives
-    // only the replaced files — the carried-forward siblings live in a
-    // later archive or are still live, so each file binds to the first
-    // location that holds it (files are immutable and uniquely named:
-    // exactly one location ever does).
+    // first. Resolution is then per FILE: a swap ([[swapFilesGranular]])
+    // archives only the files it replaced — the carried-forward
+    // siblings live in a later archive or are still live, so each file
+    // binds to the first location that holds it (files are immutable
+    // and uniquely named: exactly one location ever does).
     readLocated(locateAsOf(version, manifest))
   }
 
@@ -3508,40 +3364,41 @@ final class WarehouseTable private (
     }
     val manifest = readManifest(v)
     if (manifest.isEmpty) return Seq.empty
-    // a swap committing BETWEEN locateAsOf's archive listing and its
-    // per-day live listing moves carry-forward files into an archive
-    // generation the resolution never listed — the "missing from every
-    // candidate location" IllegalStateException. A fresh re-resolution
-    // finds them in the new archive, so retry a bounded number of
-    // times before surfacing the protocol's typed retryable abort
-    // (readCommitted's CME contract, which BI callers can retry on).
+    resolvingAcrossSwaps {
+      locateAsOf(v, manifest).groupBy(_._2).toSeq.sortBy(_._1).map {
+        case (d, grps) =>
+          d -> grps.flatMap { case (base, _, names) =>
+            val wanted = names.toSet
+            fs.listStatus(new Path(s"$base/$partitionCol=$d")).toSeq
+              .filter(st => st.isFile && wanted.contains(st.getPath.getName))
+          }
+      }
+    }
+  }
+
+  /** Run a [[locateAsOf]]-based resolution, retried across concurrent
+    * swaps: a swap committing BETWEEN locateAsOf's archive listing and
+    * its per-day live listing moves carry-forward files into an archive
+    * generation the resolution never listed — the "missing from every
+    * candidate location" IllegalStateException — or removes a listed
+    * location under the listing (FileNotFoundException). A fresh
+    * re-resolution finds them in the new archive, so retry a bounded
+    * number of times before surfacing the protocol's typed retryable
+    * abort (readCommitted's CME contract, which callers can retry on).
+    */
+  private def resolvingAcrossSwaps[T](resolve: => T): T = {
     var attempt = 0
     while (true) {
-      try {
-        return locateAsOf(v, manifest).groupBy(_._2).toSeq.sortBy(_._1).map {
-          case (d, grps) =>
-            d -> grps.flatMap { case (base, _, names) =>
-              val wanted = names.toSet
-              fs.listStatus(new Path(s"$base/$partitionCol=$d")).toSeq
-                .filter(st => st.isFile && wanted.contains(st.getPath.getName))
-            }
-        }
-      } catch {
-        case e: IllegalStateException if String.valueOf(e.getMessage)
-            .contains("missing from every candidate location") =>
+      try return resolve
+      catch {
+        case e: Exception if e.isInstanceOf[java.io.FileNotFoundException] ||
+            (e.isInstanceOf[IllegalStateException] && String.valueOf(e.getMessage)
+              .contains("missing from every candidate location")) =>
           attempt += 1
           if (attempt >= 3)
             throw new java.util.ConcurrentModificationException(
               "concurrent swaps kept moving this snapshot's files during " +
-                s"resolution — re-load the relation: ${e.getMessage}")
-        case e: java.io.FileNotFoundException =>
-          // a listed location vanished under the listing (same race,
-          // different surface): identical retry-then-typed-abort
-          attempt += 1
-          if (attempt >= 3)
-            throw new java.util.ConcurrentModificationException(
-              "concurrent swaps kept moving this snapshot's files during " +
-                s"resolution — re-load the relation: ${e.getMessage}")
+                s"resolution — re-run against the current table state: ${e.getMessage}")
       }
     }
     throw new IllegalStateException("unreachable")
@@ -3603,9 +3460,8 @@ final class WarehouseTable private (
     // claim (exactBlooms doc)
     val blooms = exactBlooms(Seq(staging -> stagedFiles))
     val v = claimCommit("restore", days, readBase + 1)
-    swapPartitions(staging, days, v)
-    writeExactBlooms(days, blooms, v)
-    finalizeCommit("restore", days, v, stagedFiles)
+    publish("restore", v, days, Some(staging), stagedFiles, None)(_ =>
+      writeExactBlooms(days, blooms, v))
     autoVacuum()
     days
   }
@@ -3656,7 +3512,7 @@ final class WarehouseTable private (
     require(dest.listDays().isEmpty && dest.currentVersion == 0L,
       s"clone destination $destRoot is not empty")
     val manifest = readManifest(v)
-    val located = locateAsOf(v, manifest)
+    val located = resolvingAcrossSwaps(locateAsOf(v, manifest))
     val destFs = new Path(destRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     try located.foreach { case (base, d, files) =>
@@ -4075,9 +3931,10 @@ final class WarehouseTable private (
     // commit, before deleteLanded could run): invisible to
     // readCommitted, but phantom rows for the listing-based read()
     // forever. A live data file absent from the CURRENT manifest is
-    // referenced by NO retained manifest — swaps/expire archive whole
-    // day dirs out of live, and append files enter CURRENT at commit
-    // or are swept by deleteLanded. Age is NOT measurable from the
+    // referenced by NO retained manifest — every swap (expire and
+    // truncate included) archives the files it replaces out of live,
+    // and append files enter CURRENT at commit or are swept by
+    // deleteLanded. Age is NOT measurable from the
     // file's own mtime (rename preserves it — that would clock from
     // the staging WRITE, advisor-found): a LIVE landing is protected
     // by its landing marker, whose mtime is the true landing time;
@@ -4289,9 +4146,8 @@ object WarehouseTable {
     * Crash recovery rolls back from THIS list — a listing taken after
     * the torn renames would count the torn new-generation files as
     * known and resurrect the archived originals alongside their
-    * rewrites — and its presence alone marks the version's archive as
-    * file-granular: written before any archive day dir exists, so no
-    * crash can leave a processed day without it.
+    * rewrites. Written before any archive day dir exists, so no crash
+    * can leave a processed day without it.
     */
   private[sources] val LiveSwapJournal: String = "_prelive"
 

@@ -114,9 +114,8 @@ object GraftCache {
   // the relation NON-RECOMPUTABLE (checkpoints truncate lineage), so —
   // unlike [[barrier]] relations, which silently recompute — a released
   // checkpoint must be provably dead: fully consumed, with no caller
-  // still holding its plan. Release sites below encode exactly that
-  // contract (a merge flush frees its own checkpoints after its staging
-  // write; iterative ops free round N−1 once round N is eagerly
+  // still holding its plan. Release sites encode exactly that contract
+  // (iterative ops free round N−1 once round N is eagerly
   // materialized). Expect one benign "cannot be recomputed after
   // unpersisting" WARN per release.
   // ---------------------------------------------------------------------
@@ -130,26 +129,10 @@ object GraftCache {
       case _ => None
     }
 
-  /** `df.transform(GraftCache.namedCheckpoint("Site.key"))` == eager
-    * `localCheckpoint(true)` with the backing RDD named
-    * `graft.ckpt:Site.key`, so a spec (or a human on the storage UI)
-    * can attribute THIS op's blocks in the context-shared registry
-    * without a global forall. Release is by HANDLE
-    * ([[releaseCheckpointOf]]), never by name: name-keyed supersede
-    * broke under concurrent flushes into the same table (two writers
-    * sharing a key would free each other's LIVE blocks mid-flush).
-    */
-  def namedCheckpoint(name: String)(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
-    ckptRdd(cp).foreach(_.setName(s"graft.ckpt:$name"))
-    cp
-  }
-
   /** Free the blocks of a checkpointed Dataset by handle — call when
-    * the checkpoint is provably dead: its last consuming action (a
-    * flush's staging write, the next round's eager checkpoint)
-    * completed and no caller still holds its plan (a released
-    * checkpoint CANNOT recompute). No-op for non-checkpoint plans, so
+    * the checkpoint is provably dead: its last consuming action (the
+    * next round's eager checkpoint) completed and no caller still holds
+    * its plan (a released checkpoint CANNOT recompute). No-op for non-checkpoint plans, so
     * loop seeds that were never checkpointed pass through safely.
     */
   def releaseCheckpointOf(df: DataFrame): Unit =

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.UUID
 
 import graft.sources.WarehouseTable
 import graft.util.GraftCache
@@ -20,10 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * pollution that reddened r16's final suite run.
   *
   * Every assertion here is ORDER-INDEPENDENT on the shared
-  * SparkContext: blocks are identified by their `graft.ckpt:<site>`
-  * RDD name with a per-test unique site/root (never a global forall
-  * over `getPersistentRDDs`), by a direct RDD handle, or by a DELTA on
-  * the monotonic [[GraftCache.checkpointsFreed]] counter (concurrent
+  * SparkContext: blocks are identified by a direct RDD handle, by an
+  * RDD-id watermark taken just before the op under test (never a
+  * global forall over `getPersistentRDDs`), or by a DELTA on the
+  * monotonic [[GraftCache.checkpointsFreed]] counter (concurrent
   * suites can only increase it).
   */
 class CheckpointLifecycleSpec extends AnyFunSuite {
@@ -38,11 +37,6 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def sc = spark.sparkContext
-
-  private def namedPersistent(name: String): Seq[Int] =
-    sc.getPersistentRDDs.toSeq.collect {
-      case (id, rdd) if rdd.name == name => id
-    }.map(_.toInt)
 
   test("Dataset.unpersist on a localCheckpoint is a no-op; RDD-handle release frees (the premise)") {
     val df = (1 to 100).toDF("x").localCheckpoint(true)
@@ -59,25 +53,6 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
     assert(rdd.getStorageLevel == StorageLevel.NONE,
       s"RDD-handle release left level ${rdd.getStorageLevel}")
     assert(GraftCache.checkpointsFreed >= before + 1)
-  }
-
-  test("namedCheckpoint registers attributable blocks; handle release frees exactly them") {
-    val site = s"test-ckpt-${UUID.randomUUID().toString.take(8)}"
-    val g1 = (1 to 50).toDF("a").transform(GraftCache.namedCheckpoint(site))
-    val g2 = (1 to 60).toDF("a").transform(GraftCache.namedCheckpoint(site))
-    val ids = namedPersistent(s"graft.ckpt:$site")
-    assert(ids.size == 2, s"expected two concurrent generations: $ids")
-    assert(g1.count() == 50 && g2.count() == 60)
-    // releasing one handle must not touch the other (the concurrency
-    // property name-keyed supersede broke: two flushes into one table
-    // freed each other's live blocks)
-    GraftCache.releaseCheckpointOf(g1)
-    assert(namedPersistent(s"graft.ckpt:$site").size == 1,
-      "handle release freed the wrong generation")
-    assert(g2.count() == 60)
-    GraftCache.releaseCheckpointOf(g2)
-    assert(namedPersistent(s"graft.ckpt:$site").isEmpty,
-      "released checkpoints still hold persistent blocks")
   }
 
   test("releaseCheckpointOf is a safe no-op on plain (non-checkpoint) plans") {
@@ -100,25 +75,22 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
       lit(0L).as("batchNumber"))
   }
 
-  test("a completed merge flush leaves no MEMORY_AND_DISK checkpoint block behind") {
+  test("a completed merge flush leaves no persistent RDD of its own behind") {
     val root = Files.createTempDirectory("wh-ckpt-lifecycle").toString + "/tbl"
     val t = WarehouseTable.create(spark, root, Seq("k1"), destSchema)
     def ts(day: Int) = to_timestamp(lit(f"2024-01-$day%02d 12:00:00"))
     t.append(Seq((1L, "a"), (2L, "b")).toDF("k1", "f1")
       .withColumn("partitionTime", ts(1)))
-    val sites = Seq(s"WarehouseTable.touched@$root", s"WarehouseTable.updates@$root")
-    // two flushes (update + tombstone) — each must free its own blocks
-    // the moment it completes, not rely on a later flush or on GC
+    // RDD ids grow monotonically per context: a persistent RDD above
+    // this watermark was created by the flushes below (the batch cache)
+    val mark = sc.emptyRDD[Int].id
+    def leftBehind = sc.getPersistentRDDs.keys.filter(_ > mark).toSeq.sorted
+    // two flushes (update + tombstone) — each must free what it
+    // persisted the moment it completes, not rely on a later flush or GC
     t.merge(staged(Seq((1L, Some("a2"), 1L, 1), (3L, Some("c"), 2L, 1))))
-    sites.foreach { s =>
-      assert(namedPersistent(s"graft.ckpt:$s").isEmpty,
-        s"flush 1 left checkpoint blocks at site $s")
-    }
+    assert(leftBehind.isEmpty, s"flush 1 left persistent RDDs: $leftBehind")
     t.merge(staged(Seq((2L, None, 3L, 1))))
-    sites.foreach { s =>
-      assert(namedPersistent(s"graft.ckpt:$s").isEmpty,
-        s"flush 2 left checkpoint blocks at site $s")
-    }
+    assert(leftBehind.isEmpty, s"flush 2 left persistent RDDs: $leftBehind")
     // and the flushes were correct (update applied, insert added, delete applied)
     val rows = t.read().select($"k1", $"f1").as[(Long, String)].collect().toMap
     assert(rows == Map(1L -> "a2", 3L -> "c"))

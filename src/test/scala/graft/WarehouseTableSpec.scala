@@ -1724,20 +1724,26 @@ class WarehouseTableSpec extends AnyFunSuite {
     t.merge(staged(Seq((1L, Some("a2"), 10L, 1)))) // v3, archives day-1 gen
     assert(t.currentVersion == 3L)
 
-    // ---- simulate a merge writer that claimed v4 touching day 1 (an
-    // existing generation) and day 3 (brand new), archived both, swapped
-    // the new generations in, and died before finalizeCommit. The torn
-    // live content is VALID parquet (a real crashed writer's staged
-    // output is fully written before the claim) — only uncommitted.
+    // ---- simulate a whole-day merge writer that claimed v4 touching
+    // day 1 (an existing generation) and day 3 (brand new), journaled
+    // and archived both days' live files, swapped the new generations
+    // in, and died before finalizeCommit. The torn live content is
+    // VALID parquet (a real crashed writer's staged output is fully
+    // written before the claim) — only uncommitted.
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def path(s: String) = new org.apache.hadoop.fs.Path(s)
     hfsWrite(s"$root/_graft/snapshots/v4.list",
       "#pending:merge\t0\t2024-01-01,2024-01-03\n")
-    // day 1: archive the live generation under the crashed claim...
-    fs.mkdirs(path(s"$root/_graft/history/v4"))
-    fs.rename(path(s"$root/data/_pday=2024-01-01"),
-      path(s"$root/_graft/history/v4/_pday=2024-01-01"))
+    // the swap's journal: every file live in its days before any move
+    val day1Live = fs.listStatus(path(s"$root/data/_pday=2024-01-01"))
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSeq.sorted
+    hfsWrite(s"$root/_graft/history/v4/_prelive",
+      day1Live.map(n => s"2024-01-01\t$n").mkString("\n"))
+    // day 1: archive the live files one by one under the crashed claim...
+    fs.mkdirs(path(s"$root/_graft/history/v4/_pday=2024-01-01"))
+    day1Live.foreach(n => fs.rename(path(s"$root/data/_pday=2024-01-01/$n"),
+      path(s"$root/_graft/history/v4/_pday=2024-01-01/$n")))
     // ...and swap in a torn new generation
     def writeTorn(day: String, rows: Seq[(Long, String)]): Unit = {
       val tmp = tmpRoot() + "-torn"
@@ -1748,7 +1754,7 @@ class WarehouseTableSpec extends AnyFunSuite {
         .foreach(f => fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dest, f.getPath.getName)))
     }
     writeTorn("2024-01-01", Seq((1L, "torn-a3")))
-    // day 3: no prior generation — the swap journals an empty marker
+    // day 3: no prior files — the swap creates an empty archive day dir
     fs.mkdirs(path(s"$root/_graft/history/v4/_pday=2024-01-03"))
     writeTorn("2024-01-03", Seq((9L, "torn-new")))
 
@@ -2425,7 +2431,7 @@ class WarehouseTableSpec extends AnyFunSuite {
               aborted.incrementAndGet()
             // stale read plan: a concurrent swap MOVED this op's listed
             // files into the version archive mid-read — a retryable
-            // abort by the documented contract (swapPartitions doc);
+            // abort by the documented contract (swapFilesGranular doc);
             // nothing committed, data intact in the archive
             case e: org.apache.spark.SparkException
                 if String.valueOf(e.getMessage).contains("FAILED_READ")

@@ -302,7 +302,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     Seq((2L, "upd")).toDF("k1", "f1").withColumn("_pday", lit(day))
       .write.partitionBy("_pday").parquet(staging)
     val v = t.claimCommit("update-where", Seq(day), cur + 1)
-    t.swapFilesGranular(staging, Map(day -> Seq(fname)), v)
+    t.swapFilesGranular(Some(staging), Map(day -> Seq(fname)), v)
     assert(t.currentVersion == cur, "crashed swap must not advance CURRENT")
     // committed reader: the manifest's replaced file is in the archive,
     // so the stale-read guard aborts retryably — never a mixed read
@@ -475,13 +475,13 @@ class CommitProtocolSpec extends AnyFunSuite {
     val liveBefore = fs(root)
       .listStatus(path(s"$root/data/_pday=$day")).map(_.getPath.getName).toSet
     // simulate restore(1)'s swap window: stage the as-of rows, claim,
-    // swapPartitions (whole-day, the restore path) — CRASH before
-    // finalizeCommit
+    // swap the whole day (every live file replaced, the restore path) —
+    // CRASH before finalizeCommit
     val staging = s"$root/.restore-crash"
     Seq((1L, "a"), (2L, "b")).toDF("k1", "f1").withColumn("_pday", lit(day))
       .write.partitionBy("_pday").parquet(staging)
     val v = t.claimCommit("restore", Seq(day), cur + 1)
-    t.swapPartitions(staging, Seq(day), v)
+    t.swapFilesGranular(Some(staging), Map(day -> liveBefore.toSeq.sorted), v)
     assert(t.currentVersion == cur, "crashed restore advanced CURRENT")
     // committed read aborts retryably mid-tear, as for every swap op
     intercept[java.util.ConcurrentModificationException] {
@@ -520,13 +520,14 @@ class CommitProtocolSpec extends AnyFunSuite {
     val day = "2024-01-01"
     val liveBefore = fs(root)
       .listStatus(path(s"$root/data/_pday=$day")).map(_.getPath.getName).toSet
-    // simulate overwriteDaysRouted's window: stage the replacement
-    // slice, claim ONLY that day, swap — CRASH before finalizeCommit
+    // simulate overwriteDays' window: stage the replacement slice,
+    // claim ONLY that day, swap the whole day — CRASH before
+    // finalizeCommit
     val staging = s"$root/.overwrite-crash"
     Seq((10L, "x")).toDF("k1", "f1").withColumn("_pday", lit(day))
       .write.partitionBy("_pday").parquet(staging)
     val v = t.claimCommit("overwrite", Seq(day), cur + 1)
-    t.swapPartitions(staging, Seq(day), v)
+    t.swapFilesGranular(Some(staging), Map(day -> liveBefore.toSeq.sorted), v)
     assert(t.currentVersion == cur, "crashed backfill advanced CURRENT")
     // the UNTOUCHED day keeps serving committed reads mid-tear
     assert(t.readCommitted(Seq("2024-01-02")).count() == 1)
@@ -556,6 +557,102 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(t.read().select($"k1", $"f1").as[(Long, String)].collect().toMap
       == Map(10L -> "x", 3L -> "c"))
     assert(t.readAsOf(cur).count() == 3, "pre-backfill snapshot lost")
+  }
+
+  test("truncate crash between its swap and finalize: recovery restores " +
+      "every day's files and rows exactly") {
+    val root = tmpRoot()
+    val t = mkTable(root)
+    t.append(batch(Seq(1L -> "a", 2L -> "b"), day = 1))       // v1
+    t.append(batch(Seq(3L -> "c"), day = 2))                  // v2
+    val cur = t.currentVersion
+    val days = Seq("2024-01-01", "2024-01-02")
+    def liveNames(d: String) =
+      fs(root).listStatus(path(s"$root/data/_pday=$d")).map(_.getPath.getName).toSet
+    val liveBefore = days.map(d => d -> liveNames(d)).toMap
+    // simulate truncate()'s window: claim every day, swap every live
+    // file out with nothing staged — CRASH before finalizeCommit
+    val v = t.claimCommit("truncate", days, cur + 1)
+    t.swapFilesGranular(None, liveBefore.map { case (d, n) => d -> n.toSeq.sorted }, v)
+    assert(t.currentVersion == cur, "crashed truncate advanced CURRENT")
+    assert(t.listDays().isEmpty, "the swap left a live day behind")
+    // age + collide: recovery moves every archived file back
+    val claimPath = java.nio.file.Paths.get(s"$root/_graft/snapshots/v$v.list")
+    val aged = new String(java.nio.file.Files.readAllBytes(claimPath), "UTF-8")
+      .replaceFirst("\\t\\d+\\t",
+        "\t" + (System.currentTimeMillis() - 20L * 60 * 1000) + "\t")
+    java.nio.file.Files.write(claimPath, aged.getBytes("UTF-8"))
+    intercept[java.util.ConcurrentModificationException] {
+      t.claimCommit("compact", Seq(days.head), v)
+    }
+    assert(days.map(d => d -> liveNames(d)).toMap == liveBefore,
+      "truncate rollback did not restore every day's files")
+    assert(t.currentVersion == cur && !fs(root).exists(
+      path(s"$root/_graft/snapshots/v$v.list")) &&
+      !fs(root).exists(path(s"$root/_graft/history/v$v")))
+    assert(t.read().select($"k1", $"f1").as[(Long, String)].collect().toMap
+      == Map(1L -> "a", 2L -> "b", 3L -> "c"))
+    // replay converges: the retried truncate empties the table, and the
+    // pre-truncate snapshot still reads exactly
+    assert(t.truncate() == days)
+    assert(t.read().count() == 0 && t.listDays().isEmpty)
+    assert(t.readAsOf(cur).select($"k1", $"f1").as[(Long, String)]
+      .collect().toMap == Map(1L -> "a", 2L -> "b", 3L -> "c"))
+  }
+
+  test("recovery refuses an archive with day dirs but no swap journal and " +
+      "names the version") {
+    val root = tmpRoot()
+    val t = mkTable(root)
+    t.append(batch(Seq(1L -> "a")))
+    val cur = t.currentVersion
+    val day = "2024-01-01"
+    // a crashed claim whose archive holds a day dir but no _prelive
+    val v = t.claimCommit("compact", Seq(day), cur + 1)
+    fs(root).mkdirs(path(s"$root/_graft/history/v$v/_pday=$day"))
+    val claimPath = java.nio.file.Paths.get(s"$root/_graft/snapshots/v$v.list")
+    val aged = new String(java.nio.file.Files.readAllBytes(claimPath), "UTF-8")
+      .replaceFirst("\\t\\d+\\t",
+        "\t" + (System.currentTimeMillis() - 20L * 60 * 1000) + "\t")
+    java.nio.file.Files.write(claimPath, aged.getBytes("UTF-8"))
+    val e = intercept[IllegalStateException] {
+      t.claimCommit("compact", Seq(day), v)
+    }
+    assert(e.getMessage.contains(s"v$v ") && e.getMessage.contains("_prelive"),
+      e.getMessage)
+    // nothing was rolled back on a guess: the live day is untouched
+    assert(t.read().select($"k1").as[Long].collect().toSeq == Seq(1L))
+  }
+
+  test("compactPartitions swaps a day out whole: a landed-but-uncommitted " +
+      "file leaves the live day, committed rows and the pre-compaction " +
+      "snapshot read exactly") {
+    val root = tmpRoot()
+    val t = mkTable(root)
+    t.append(batch(Seq(1L -> "a")))                           // v1
+    t.append(batch(Seq(2L -> "b")))                           // v2
+    val cur = t.currentVersion
+    val day = "2024-01-01"
+    // a concurrent writer's landed file that never committed (no
+    // landing marker): live, but in no manifest
+    val junk = s"$root/.junk-landing"
+    Seq((99L, "junk")).toDF("k1", "f1").coalesce(1).write.parquet(junk)
+    val junkFile = fs(root).listStatus(path(junk))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+    fs(root).rename(junkFile, path(s"$root/data/_pday=$day/${junkFile.getName}"))
+    assert(t.read().count() == 3, "premise: the listing read sees the landing")
+    assert(t.compactPartitions(Seq(day)) == Seq(day))
+    val live = fs(root).listStatus(path(s"$root/data/_pday=$day"))
+      .map(_.getPath.getName).toSet
+    assert(!live.contains(junkFile.getName),
+      "the whole-day swap left the uncommitted file live")
+    assert(fs(root).exists(path(
+      s"$root/_graft/history/v${cur + 1}/_pday=$day/${junkFile.getName}")),
+      "the uncommitted file was not archived with the replaced day")
+    assert(t.read().select($"k1", $"f1").as[(Long, String)].collect().toMap
+      == Map(1L -> "a", 2L -> "b"))
+    assert(t.readAsOf(cur).select($"k1", $"f1").as[(Long, String)]
+      .collect().toMap == Map(1L -> "a", 2L -> "b"))
   }
 
   test("cloneToFast crash mid-copy: the torn destination reads as EMPTY " +
